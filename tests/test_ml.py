@@ -181,6 +181,37 @@ def test_detector_memo_evicts_dead_application_keys(spark):
     assert MQ._detector(spark, SF_DIR, "kmeans") is out
 
 
+def test_ensemble_shares_one_scaled_frame(spark, monkeypatch):
+    """All seven detectors and the ensemble consume the one memoized
+    scaled frame of (application, sf_dir); a repeat ensemble call fits
+    nothing and caches nothing new."""
+    from tests.conftest import SF_SMALL
+    from threat_detection_nosql_spark.queries import ml_queries as MQ
+
+    seen = []
+
+    def recording(fn):
+        def detector(scaled):
+            seen.append(scaled)
+            return fn(scaled)
+        return detector
+
+    monkeypatch.setattr(MQ, "_DETECTORS", {
+        name: recording(fn) for name, fn in MQ._DETECTORS.items()})
+    ensemble = U.ensemble_detector
+    monkeypatch.setattr(U, "ensemble_detector", lambda scaled, **kw: (
+        seen.append(scaled), ensemble(scaled, **kw))[1])
+    MQ._memo.clear()
+    MQ.ensemble_anomalies(spark, SF_SMALL).collect()
+    assert len(seen) == len(MQ._DETECTORS) + 1 == 8
+    assert all(s is seen[0] for s in seen)
+    jsc = spark.sparkContext._jsc
+    cached = jsc.getPersistentRDDs().size()
+    MQ.ensemble_anomalies(spark, SF_SMALL).collect()
+    assert len(seen) == 9 and seen[-1] is seen[0]
+    assert jsc.getPersistentRDDs().size() == cached
+
+
 def test_hist_gbdt_separates_planted_and_is_deterministic(spark, fixture):
     """M14 proper: the from-scratch histogram booster must separate the
     planted fixture cleanly and, with no RNG anywhere (fixed-width

@@ -53,10 +53,14 @@ def scale_features(df: DataFrame, in_col: str = "features",
 
 def scaled_user_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end: events → per-user feature matrix → assembled +
-    scaled vector column. The DataFrame every detector consumes."""
+    scaled vector column. The DataFrame every detector consumes.
+
+    The assembled matrix is cached before the scaler fit, so the fit's
+    job fills the cache and the detectors' jobs read it: the feature
+    build runs once, not once for the fit and again for the detector."""
     from threat_detection_nosql_spark.queries.threat import user_features
     feats = user_features(spark, sf_dir)
-    return scale_features(assemble_features(feats)).cache()
+    return scale_features(assemble_features(feats).cache())
 
 
 def synthetic_anomaly_fixture(spark: SparkSession, n: int = 200,

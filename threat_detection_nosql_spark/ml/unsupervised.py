@@ -38,33 +38,42 @@ semantics.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 CONTAMINATION = 0.1  # reference default (`Comparaison_ML.py:134`)
+
+
+def _unit_scaled(col: str) -> Column:
+    """A17: ``col`` min-max normalized against the joined 1-row
+    ``_mn``/``_mx`` stats (0 when the column is constant)."""
+    mn, mx = F.col("_mn"), F.col("_mx")
+    return (F.when(mx > mn, (F.col(col) - mn) / (mx - mn))
+            .otherwise(F.lit(0.0)))
 
 
 def _minmax(df: DataFrame, col: str) -> DataFrame:
     """A17: global min-max normalize one column (broadcast 1-row stats)."""
     stats = df.agg(F.min(col).alias("_mn"), F.max(col).alias("_mx"))
     return (df.join(F.broadcast(stats))
-            .withColumn(col, F.when(
-                F.col("_mx") > F.col("_mn"),
-                (F.col(col) - F.col("_mn")) / (F.col("_mx") - F.col("_mn")))
-                .otherwise(F.lit(0.0)))
+            .withColumn(col, _unit_scaled(col))
             .drop("_mn", "_mx"))
 
 
 def _threshold_flag(df: DataFrame, score_col: str, flag_col: str,
                     contamination: float = CONTAMINATION) -> DataFrame:
-    """A16: flag the top `contamination` fraction by score via an exact
-    percentile cutoff (percentile_approx at 100 TB)."""
-    thr = df.agg(F.percentile(score_col, F.lit(1 - contamination))
-                 .alias("_thr"))
-    return (df.join(F.broadcast(thr))
-            .withColumn(flag_col,
-                        (F.col(score_col) > F.col("_thr")).cast("int"))
-            .drop("_thr"))
+    """A16 + A17: flag the top `contamination` fraction by raw score via
+    an exact percentile cutoff (percentile_approx at 100 TB), and
+    min-max normalize the score, from one broadcast 1-row aggregate."""
+    stats = df.agg(F.percentile(score_col, F.lit(1 - contamination))
+                   .alias("_thr"),
+                   F.min(score_col).alias("_mn"),
+                   F.max(score_col).alias("_mx"))
+    return (df.join(F.broadcast(stats))
+            .withColumns({
+                flag_col: (F.col(score_col) > F.col("_thr")).cast("int"),
+                score_col: _unit_scaled(score_col)})
+            .drop("_thr", "_mn", "_mx"))
 
 
 # ---------------------------------------------------------------------------
@@ -147,7 +156,6 @@ def pca_reconstruction_detector(scaled: DataFrame, k: int = 3,
                        F.lit(0.0), lambda a, b: a + b) / d)
     out = scaled.withColumn("pca_mse", mse).select(key, "pca_mse")
     out = _threshold_flag(out, "pca_mse", "pca_anomaly", contamination)
-    out = _minmax(out, "pca_mse")
     return out.withColumnRenamed("pca_mse", "pca_score")
 
 
@@ -284,7 +292,6 @@ def autoencoder_detector(scaled: DataFrame,
     out = proj.mapInPandas(
         score_batches, schema=f"{key} {key_type}, ae_mse double")
     out = _threshold_flag(out, "ae_mse", "ae_anomaly", contamination)
-    out = _minmax(out, "ae_mse")
     return out.withColumnRenamed("ae_mse", "ae_score")
 
 
@@ -378,22 +385,25 @@ def mahalanobis_detector(scaled: DataFrame,
                          reg: float = 1e-6) -> DataFrame:
     """OCSVM substitute (documented deviation, SURVEY.md M3): squared
     Mahalanobis distance to the fitted Gaussian. Covariance via one
-    distributed pass (Summarizer), d×d inverse on the driver,
-    broadcast quadratic form evaluated as expressions."""
-    from pyspark.ml.stat import Summarizer
+    distributed pass (first and second moments in one aggregate; the
+    dimension d comes from the vector column's ``ml_attr`` metadata),
+    d×d inverse on the driver, broadcast quadratic form evaluated as
+    expressions."""
     from pyspark.ml.functions import vector_to_array
 
-    row = scaled.select(Summarizer.mean(F.col("scaled")).alias("mu")).first()
-    mu = np.array(row["mu"].toArray())
-    # covariance: E[xxᵀ] − μμᵀ via RowMatrix-free aggregation
-    d = len(mu)
+    d = scaled.schema["scaled"].metadata["ml_attr"]["num_attrs"]
     x = vector_to_array(F.col("scaled"))
+    xs = [F.element_at(x, i + 1) for i in range(d)]
+    # μ = E[x] and covariance E[xxᵀ] − μμᵀ from one aggregate
+    # (RowMatrix-free)
     sums = scaled.select(*[
-        F.sum(F.element_at(x, i + 1) * F.element_at(x, j + 1))
-         .alias(f"s_{i}_{j}")
+        F.sum(xs[i]).alias(f"m_{i}") for i in range(d)
+    ], *[
+        F.sum(xs[i] * xs[j]).alias(f"s_{i}_{j}")
         for i in range(d) for j in range(i, d)
     ], F.count("*").alias("n")).first()
     n = sums["n"]
+    mu = np.array([sums[f"m_{i}"] / n for i in range(d)])
     cov = np.zeros((d, d))
     for i in range(d):
         for j in range(i, d):
@@ -412,8 +422,7 @@ def mahalanobis_detector(scaled: DataFrame,
                                   lambda a, b: a * b),
                        F.lit(0.0), lambda a, b: a + b)
     out = scaled.withColumn("maha_score", quad).select(key, "maha_score")
-    out = _threshold_flag(out, "maha_score", "maha_anomaly", contamination)
-    return _minmax(out, "maha_score")
+    return _threshold_flag(out, "maha_score", "maha_anomaly", contamination)
 
 
 # ---------------------------------------------------------------------------
@@ -558,9 +567,8 @@ def iforest_detector(scaled: DataFrame, n_trees: int = 200,
 
     out = proj.mapInPandas(
         score_batches, schema=f"{key} {key_type}, iforest_score double")
-    out = _threshold_flag(out, "iforest_score", "iforest_anomaly",
-                          contamination)
-    return _minmax(out, "iforest_score")
+    return _threshold_flag(out, "iforest_score", "iforest_anomaly",
+                           contamination)
 
 
 # ---------------------------------------------------------------------------

@@ -8,14 +8,14 @@ stays inside whole-stage codegen and nothing leaves the JVM.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from threat_detection_nosql_spark.sources.readers import load_table
 
 
-def derive_temporal_features(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Temporal feature derivation (`data_preprocessing.py:15-21`).
+def _temporal_features(ts_col: str) -> dict[str, Column]:
+    """Temporal feature columns (`data_preprocessing.py:15-21`).
 
     - ``hour_of_day``: 0-23 (F2)
     - ``day_of_week``: Monday=0 like ``pandas.dt.dayofweek`` — Spark's
@@ -26,12 +26,15 @@ def derive_temporal_features(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     ts = F.col(ts_col)
     hour = F.hour(ts)
     dow_mon0 = (F.dayofweek(ts) + F.lit(5)) % 7
-    return (df
-            .withColumn("hour_of_day", hour)
-            .withColumn("day_of_week", dow_mon0)
-            .withColumn("is_weekend", (dow_mon0 >= 5).cast("int"))
-            .withColumn("is_after_hours",
-                        ((hour < 8) | (hour > 18)).cast("int")))
+    return {"hour_of_day": hour,
+            "day_of_week": dow_mon0,
+            "is_weekend": (dow_mon0 >= 5).cast("int"),
+            "is_after_hours": ((hour < 8) | (hour > 18)).cast("int")}
+
+
+def derive_temporal_features(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+    """Append the temporal feature columns of ``ts_col`` (F2–F5)."""
+    return df.withColumns(_temporal_features(ts_col))
 
 
 def preprocess_activity_log(df: DataFrame) -> DataFrame:
@@ -71,15 +74,15 @@ def activity_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph (SURVEY.md §1.2), this single DataFrame *is* the whole graph.
     """
     ev = load_table(spark, sf_dir, "events")
-    df = (ev
-          .withColumn("user", F.col("user_id"))
-          .withColumn("activity", F.col("event_type"))
-          .withColumn("resource",
-                      F.regexp_extract("props", r'"k": (\d+)', 1).cast("long"))
-          .withColumn("pc", F.col("event_id") % 13))
-    return derive_temporal_features(df, "ts").select(
-        "event_id", "ts", "user", "pc", "activity", "resource", "value",
-        "hour_of_day", "day_of_week", "is_weekend", "is_after_hours")
+    return ev.select(
+        "event_id", "ts",
+        F.col("user_id").alias("user"),
+        (F.col("event_id") % 13).alias("pc"),
+        F.col("event_type").alias("activity"),
+        F.regexp_extract("props", r'"k": (\d+)', 1).cast("long")
+        .alias("resource"),
+        "value",
+        *[c.alias(n) for n, c in _temporal_features("ts").items()])
 
 
 # DuckDB-equivalent SQL fragment for the same view, used by oracle_sql()

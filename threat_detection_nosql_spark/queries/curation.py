@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from threat_detection_nosql_spark.operators.dedup import _portable_hash60
 from threat_detection_nosql_spark.sources.readers import load_table
 
 _DSIR_BUCKETS = 256
@@ -190,8 +191,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
              .select("doc_id", "lang",
                      F.explode(F.concat(F.col("toks"), bigrams))
                      .alias("feat")))
-    bucket = (F.conv(F.substring(F.md5("feat"), 1, 15), 16, 10)
-              .cast("long") % _DSIR_BUCKETS)
+    bucket = _portable_hash60(F.col("feat")) % _DSIR_BUCKETS
     fb = feats.select("doc_id", "lang", bucket.alias("bucket"))
     # ONE pass over the exploded features (guide §2.4): the before-plan
     # built the explode+md5 chain twice — once for the bucket stats and

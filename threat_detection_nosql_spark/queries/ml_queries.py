@@ -2,10 +2,11 @@
 correctness gate is detection quality on the planted-anomaly fixture,
 per BASELINE.md; see tests/test_ml.py).
 
-Detector outputs are memoized per (session, sf_dir) and persisted:
-the registry runs the five individual detector queries and then the
-ensemble, which would otherwise re-fit all five — with the memo the
-ensemble is a 5-way join of cached 150-row frames. Outputs are tiny
+Detector outputs are memoized per (application, sf_dir) and persisted,
+and so is the one scaled feature frame they all consume: the registry
+runs the seven individual detector queries and then the ensemble, which
+would otherwise re-fit all seven and the scaler — with the memo the
+ensemble is a 7-way join of cached per-user frames. Outputs are tiny
 (one row per user), so the cache cost is negligible.
 """
 
@@ -32,25 +33,38 @@ _DETECTORS = {
     "ocsvm": lambda scaled: U.rff_ocsvm_detector(scaled),
 }
 
-# Memoized per (Spark application, sf_dir, detector): keyed by
+# Memoized per (Spark application, sf_dir, name): keyed by
 # applicationId — unlike id(spark), which a garbage-collected session
 # can recycle and alias a stale cached frame onto a new session. When
 # the application changes, every cached frame from the dead app is
 # dropped (its cache blocks died with the app's executors anyway, so
 # this is bookkeeping, not an unpersist RPC into a dead context).
+# Names are the detectors' and "scaled", the one scaled feature frame
+# all detectors and the ensemble share.
 _memo: dict[tuple, DataFrame] = {}
 
 
-def _detector(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def _memoized(spark: SparkSession, sf_dir: str, name: str,
+              build) -> DataFrame:
     app_id = spark.sparkContext.applicationId
     stale = [k for k in _memo if k[0] != app_id]
     for k in stale:
         _memo.pop(k)
     key = (app_id, sf_dir, name)
     if key not in _memo:
-        scaled = scaled_user_features(spark, sf_dir)
-        _memo[key] = _DETECTORS[name](scaled).cache()
+        _memo[key] = build()
     return _memo[key]
+
+
+def _scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _memoized(spark, sf_dir, "scaled",
+                     lambda: scaled_user_features(spark, sf_dir))
+
+
+def _detector(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    return _memoized(
+        spark, sf_dir, name,
+        lambda: _DETECTORS[name](_scaled(spark, sf_dir)).cache())
 
 
 def kmeans_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -90,8 +104,7 @@ def dbscan_noise_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ensemble_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = {name: _detector(spark, sf_dir, name) for name in _DETECTORS}
-    return U.ensemble_detector(scaled_user_features(spark, sf_dir),
-                               parts=parts)
+    return U.ensemble_detector(_scaled(spark, sf_dir), parts=parts)
 
 
 _SMOTE_N, _SMOTE_ANOM = 200, 20

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from threat_detection_nosql_spark.operators.dedup import _portable_hash60
 from threat_detection_nosql_spark.sources.readers import load_table
 
 STOPWORDS = ("the", "a", "of", "and", "to", "is", "in", "it")
@@ -1193,8 +1194,7 @@ def hashed_feature_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("doc_id", F.explode(F.split(F.col("text"), r"\s+"))
                    .alias("token"))
            .filter(F.col("token") != ""))
-    bucket = (F.conv(F.substring(F.md5("token"), 1, 15), 16, 10)
-              .cast("long") % _FH_BUCKETS)
+    bucket = _portable_hash60(F.col("token")) % _FH_BUCKETS
     return (tok.select("doc_id", bucket.alias("bucket"))
             .groupBy("doc_id", "bucket")
             .agg(F.count("*").alias("tf")))

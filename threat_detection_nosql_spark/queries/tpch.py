@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from threat_detection_nosql_spark.operators.dedup import _portable_hash60
 from threat_detection_nosql_spark.sources.readers import load_table
 
 _CUTOFF = "1998-06-01"
@@ -797,7 +798,7 @@ def _partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     def h60(tag: str):
         key = F.concat_ws(":", F.col("ps_partkey"), F.col("ps_suppkey"),
                           F.lit(tag))
-        return F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("long")
+        return _portable_hash60(key)
 
     return (ps
             .withColumn("ps_availqty", h60("aq") % 40 + 1)

@@ -16,22 +16,12 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from threat_detection_nosql_spark.operators.etl import derive_temporal_features
-
-def _events_stream_schema(ts_type: T.DataType) -> T.StructType:
-    """events stream-source schema; ``ts`` is TIMESTAMP(NANOS) in the
-    driver parquet, whose Spark-side type depends on the session (see
-    events_stream)."""
-    return T.StructType([
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", ts_type),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ])
+from threat_detection_nosql_spark.sources.readers import (
+    load_table,
+    stream_table,
+)
 
 
 def events_stream(spark: SparkSession, sf_dir: str,
@@ -41,30 +31,12 @@ def events_stream(spark: SparkSession, sf_dir: str,
     defers watermarking to the caller (e.g. stream-stream joins must
     watermark the renamed per-side time columns instead).
 
-    TIMESTAMP(NANOS) handling mirrors sources.readers.load_table: a
-    session built with ``nanosAsLong=true`` surfaces ``ts`` as nano
-    longs, a vanilla Spark 4.1 session as micro-truncated
-    TIMESTAMP_NTZ — and the conf cannot be flipped after session
-    creation, so the stream-source schema must match the session. A
-    one-row batch probe of the same file decides which.
+    The source schema and the TIMESTAMP(NANOS) handling come from the
+    table's catalog entry (sources.readers.stream_table), so a stream
+    and a batch read of `events` in one session agree on ``ts``.
     """
-    probe = (spark.read.parquet(f"{sf_dir}/events.parquet")
-             .schema["ts"].dataType)
-    if not isinstance(probe, T.LongType):
-        # NTZ→timestamp cast parity with DuckDB needs a UTC session
-        # (same reasoning as sources.readers.load_table)
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = (spark.readStream
-           .schema(_events_stream_schema(probe))
-           .option("pathGlobFilter", "events.parquet")
-           .parquet(sf_dir))
-    ts = (F.timestamp_micros(F.expr("ts div 1000"))
-          if isinstance(probe, T.LongType)
-          else F.col("ts").cast("timestamp"))
-    df = (raw
-          .withColumn("ts", ts)
-          .withColumn("user", F.col("user_id"))
-          .withColumn("activity", F.col("event_type")))
+    df = stream_table(spark, sf_dir, "events").withColumns(
+        {"user": F.col("user_id"), "activity": F.col("event_type")})
     out = derive_temporal_features(df, "ts")
     return out.withWatermark("ts", watermark) if watermark else out
 
@@ -334,7 +306,7 @@ def static_enriched_nation_counts(spark: SparkSession,
     shuffles for the join. AQE doesn't re-plan inside micro-batches,
     so the explicit broadcast hint matters here more than in batch."""
     ev = events_stream(spark, sf_dir)
-    cust = (spark.read.parquet(f"{sf_dir}/customer.parquet")
+    cust = (load_table(spark, sf_dir, "customer")
             .select(F.col("c_custkey"), F.col("c_nationkey")))
     joined = ev.join(F.broadcast(cust),
                      ev["user_id"] == cust["c_custkey"])
@@ -532,8 +504,6 @@ def drift_psi_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     it runs per trigger in foreachBatch against the frozen reference.
     Out-of-range live values clamp into the edge bins (fixed edges are
     what makes reference vs live comparable)."""
-    from threat_detection_nosql_spark.sources.readers import load_table
-
     static = (load_table(spark, sf_dir, "events")
               .filter((F.col("ts") < _DRIFT_CUTOFF)
                       & F.col("value").isNotNull()))
@@ -759,10 +729,7 @@ def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus table (no event-time column, so complete-mode aggregations
     need no watermark; state-boundedness comes from the aggregate's
     own key domain instead)."""
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    return (spark.readStream.schema(schema)
-            .option("pathGlobFilter", "documents.parquet")
-            .parquet(sf_dir))
+    return stream_table(spark, sf_dir, "documents")
 
 
 def token_df_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -982,7 +949,7 @@ def incremental_dedup_matches(spark: SparkSession,
     from threat_detection_nosql_spark.operators.sampling import (
         hash_bucket,
     )
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     bucket = hash_bucket(F.col("doc_id"), salt="batch")
     old = docs.filter(bucket < 8000)
     stream = (documents_stream(spark, sf_dir)
