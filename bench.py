@@ -6,6 +6,10 @@ Timing = full query execution including the action (count via
 ``df.write.format("noop")`` would skip result materialization; we use
 ``collect()`` on small results / ``count()`` on large ones, mirroring
 what a consumer does with each query).
+
+Usage:
+    python bench.py              # full run: JSON line + BENCH_DETAIL.json
+    python bench.py NAME...      # subset: med/min/max table for NAMEs
 """
 
 from __future__ import annotations
@@ -25,463 +29,252 @@ from threat_detection_nosql_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Headline set: the flagship threat surface + the heaviest relational ops.
-# Large-output queries are counted, small ones collected.
-HEADLINE_COLLECT = [
-    "after_hours_top10",
-    "high_activity_top10",
-    "unusual_resources_top10",
-    "degree_centrality_top10",
-    "user_features",
-    "pricing_summary",
-    "top_revenue_orders",
-    "nation_revenue",
-    "returnflag_rollup",
-]
-HEADLINE_COUNT = [
-    "two_hop_resource_paths",
-    "supplier_running_revenue",
+# Headline set: the flagship threat surface + the heaviest relational
+# ops. "value" is their total; it stays comparable across rounds because
+# every later surface is timed in its own group below.
+HEADLINE = [
+    "after_hours_top10", "high_activity_top10", "unusual_resources_top10",
+    "degree_centrality_top10", "user_features", "pricing_summary",
+    "top_revenue_orders", "nation_revenue", "returnflag_rollup",
+    "two_hop_resource_paths", "supplier_running_revenue",
     "top_orders_per_customer",
 ]
 
-# Training-data-pipeline surface, reported separately so the headline
-# total stays comparable across rounds ("value" = headline only;
-# "pipeline_total" covers this group).
-PIPELINE_COLLECT = [
-    "cosine_topk",
-    "srp_ann_topk",
-    "shipping_priority_top10",
-]
-PIPELINE_COUNT = [
-    "exact_dedup_groups",
-    "token_counts",
-    "minhash_sig_near_dups",
-    "event_sessions",
-    "benchmark_decontamination",
-]
+# One entry per bench group, in run order: JSON label -> query names.
+GROUPS: dict[str, list[str]] = {
+    "pipeline_total": [
+        "cosine_topk", "srp_ann_topk", "shipping_priority_top10",
+        "exact_dedup_groups", "token_counts", "minhash_sig_near_dups",
+        "event_sessions", "benchmark_decontamination"],
+    "extended_total": [
+        "funnel_conversion", "copurchase_triangles",
+        "local_supplier_volume", "nation_market_share",
+        "ivf_fixed_ann_topk", "cohort_retention", "unigram_logprob_scores",
+        "customer_order_distribution", "returned_items_top20",
+        "kmeans_fixed_anomalies", "corpus_curation_pipeline"],
+    "round4_total": [
+        "bpe_merges", "countmin_token_estimates", "feature_drift_psi",
+        "bpe_subword_freqs", "time_to_next_purchase"],
+    "round5_total": [
+        "stream_drift_psi", "hll_portable_distinct_users",
+        "embedding_ann_near_dups", "near_dup_groups",
+        "min_cost_regional_supplier", "excess_stock_suppliers",
+        "bm25_top_terms", "user_js_divergence", "link_prediction_top20",
+        "copurchase_communities", "kcore_parts", "stream_session_windows",
+        "dup_span_stats"],
+    "round5b_total": [
+        "user_daily_gap_filled", "user_daily_ewma",
+        "activity_transition_matrix", "sequence_surprise_top10",
+        "similar_user_pairs_top10", "rare_resource_access_top10",
+        "seasonal_zscore_anomalies", "source_quantile_normalized",
+        "nb_lang_predictions", "logreg_gd_report",
+        "product_type_profit_full", "hashed_feature_counts",
+        "activity_value_quartiles", "longest_after_hours_streak",
+        "activity_hour_mutual_info", "user_activity_trend",
+        "risk_propagation_top20", "near_dup_keep_best",
+        "stream_topk_users", "stream_markov_transitions"],
+    "round5c_total": [
+        "doc_novelty_scores", "arrival_burstiness_top10",
+        "activity_trigram_top10", "conversion_latency_quartiles",
+        "winsorized_order_values", "dau_wau_stickiness", "revenue_pareto",
+        "repurchase_interval_histogram", "source_lang_chi2",
+        "open_order_aging", "worst_error_windows_top10",
+        "part_supplier_hhi_top20", "new_vs_returning_users",
+        "vocab_growth_curve", "session_activity_lift",
+        "weighted_median_acctbal", "user_behavior_quadrants",
+        "customer_rfm_segments", "zipf_fit", "kmeans_silhouette",
+        "embedding_norm_audit", "stream_hll_user_registers",
+        "user_triage_report"],
+    "round7_total": [
+        "ann_recall_report", "inverted_postings", "phrase_search_hits",
+        "embedding_sq8_audit", "key_skew_audit", "split_leakage_repair",
+        "stream_token_df", "hll_set_expressions", "rule_pr_auc",
+        "stream_markov_ordered"],
+    "round7b_total": [
+        "doc_perplexity_filter", "dsir_importance_weights",
+        "hard_negative_mining", "local_clustering_coefficient"],
+    "round7c_total": [
+        "rrf_hybrid_search", "ndcg_retrieval_eval", "mmr_diversified_topk",
+        "bootstrap_revenue_ci", "conformal_price_threshold",
+        "cuped_adjusted_lift", "vocab_richness_report",
+        "group_kfold_assignment", "containment_near_dups",
+        "isotonic_calibration", "kaplan_meier_conversion",
+        "mann_whitney_variant_test", "ks_split_drift",
+        "tokenizer_fertility", "incremental_corpus_dedup",
+        "stream_incremental_dedup", "regression_metrics_report"],
+    "round7d_total": [
+        "nation_revenue_gini", "brand_assoc_rules_top20",
+        "kendall_tau_binned", "peak_concurrency_by_type",
+        "readability_report", "template_prefix_dups",
+        "stream_peak_concurrency", "user_twap_value", "ohlc_hourly_bars",
+        "cohort_ltv_curve", "session_path_top10",
+        "minhash_calibration_report", "cdc_last_writer_state",
+        "stream_cdc_state", "revenue_bridge_wow", "abc_xyz_parts",
+        "neyman_allocation_plan", "neyman_quota_sample"],
+    "round7e_total": [
+        "benford_digit_audit", "activity_weekend_chi2",
+        "value_mad_outliers", "theil_sen_user_trend", "segment_year_pivot",
+        "referential_integrity_audit", "stream_funnel_ordered",
+        "mrr_retrieval_eval", "welch_t_variant_test",
+        "diff_in_diff_purchases", "variant_quantile_effects",
+        "sprt_daily_monitor", "seasonal_naive_backtest",
+        "holt_linear_daily", "props_variant_stats",
+        "funnel_conversion_24h", "linear_touch_attribution",
+        "session_entry_exit_report", "revenue_retention_waterfall",
+        "fulfillment_cycle_percentiles"],
+    "round8_total": [
+        "media_decode_stats", "kmv_value_quantiles", "user_pca_projection",
+        "stream_kmv_quantiles", "audio_frame_features", "image_tile_stats",
+        "chunked_documents"],
+    "round9_total": [
+        "media_features", "media_frame_sample", "media_resize_stats",
+        "heavy_hitter_tokens", "smote_resampled_counts",
+        "tsne_substitute_projection", "gif_decode_stats",
+        "events_jsonl_roundtrip", "orders_orc_roundtrip",
+        "documents_csv_gauntlet", "events_partitioned_prune",
+        "schema_evolution_union", "compression_codec_report",
+        "stream_jsonl_ingest", "compacted_scan_digest",
+        "schema_drift_report", "documents_text_roundtrip",
+        "pq_quantization_report", "pq_adc_topk", "hyperball_reach_report",
+        "truncated_embedding_recall", "png_decode_stats",
+        "ivfpq_adc_topk"],
+    "round11_total": [
+        "jpeg_decode_stats", "jpeg_color_decode_stats",
+        "jpeg420_decode_stats", "lsh_ann_topk", "theta_user_overlap",
+        "stream_theta_overlap", "repeated_substring_spans"],
+    "round12_total": [
+        "jpeg_restart_decode_stats", "jpeg_progressive_decode_stats",
+        "jpeg_progressive_color_decode_stats",
+        "jpeg_progressive_420_decode_stats", "jpeg_color_sampled_digest",
+        "jpeg420_sampled_digest", "avi_mjpeg_decode_stats",
+        "tiff_decode_stats", "autoencoder_fixed_anomalies",
+        "ocsvm_fixed_anomalies"],
+}
 
-# Round-3 surface, its own group ("extended_total") so headline and
-# pipeline totals stay comparable across rounds.
-EXTENDED_COLLECT = [
-    "funnel_conversion",
-    "copurchase_triangles",
-    "local_supplier_volume",
-    "nation_market_share",
-    "ivf_fixed_ann_topk",
-]
-EXTENDED_COUNT = [
-    "cohort_retention",
-    "unigram_logprob_scores",
-    "customer_order_distribution",
-    "returned_items_top20",
-    "kmeans_fixed_anomalies",
-    "corpus_curation_pipeline",
-]
-
-# Round-4 surface ("round4_total"): BPE training, portable Count-Min,
-# PSI drift, forward as-of. Own group so prior totals stay comparable.
-ROUND4_COLLECT = [
-    "bpe_merges",
-    "countmin_token_estimates",
-    "feature_drift_psi",
-]
-ROUND4_COUNT = [
-    "bpe_subword_freqs",
-    "time_to_next_purchase",
-]
-
-
-# Round-5 surface ("round5_total"): ANN-first near-dup, transitive
-# dedup groups, and the streaming batch-morph centerpieces. Own group
-# so prior totals stay comparable.
-ROUND5_COLLECT = [
-    "stream_drift_psi",
-    "hll_portable_distinct_users",
-    # collect, not count: both end in a row-preserving left join whose
-    # right side is aggregate-unique, so a count() lets Catalyst prune
-    # the entire scoring/closure subtree and times an empty plan
-    "embedding_ann_near_dups",
-    "near_dup_groups",
-]
-ROUND5_COUNT = [
-    "stream_session_windows",
-    "dup_span_stats",
-]
-ROUND5_COLLECT += [
-    "min_cost_regional_supplier",
-    "excess_stock_suppliers",
-    # late round-5 additions: retrieval scoring, drift distance, and
-    # the co-purchase graph-mining trio
-    "bm25_top_terms",
-    "user_js_divergence",
-    "link_prediction_top20",
-    "copurchase_communities",
-    "kcore_parts",
-]
-
-
-# Second/third late-round-5 wave ("round5b_total"): the sequence/
-# calibration/training additions. Own group so round5_total stays
-# comparable within the round.
-ROUND5B_COLLECT = [
-    "user_daily_gap_filled",
-    "user_daily_ewma",
-    "activity_transition_matrix",
-    "sequence_surprise_top10",
-    "similar_user_pairs_top10",
-    "rare_resource_access_top10",
-    "seasonal_zscore_anomalies",
-    "source_quantile_normalized",
-    "nb_lang_predictions",
-    "logreg_gd_report",
-    "product_type_profit_full",
-    "hashed_feature_counts",
-    "activity_value_quartiles",
-    "longest_after_hours_streak",
-    "activity_hour_mutual_info",
-    "user_activity_trend",
-    "risk_propagation_top20",
-    "near_dup_keep_best",
-    "stream_topk_users",
-    "stream_markov_transitions",
-]
-ROUND5B_COUNT: list = []
-
-
-# Fourth late-round-5 wave ("round5c_total"): analytics batch +
-# sketch-twin closure + the composite triage capstone.
-ROUND5C_COLLECT = [
-    "doc_novelty_scores",
-    "arrival_burstiness_top10",
-    "activity_trigram_top10",
-    "conversion_latency_quartiles",
-    "winsorized_order_values",
-    "dau_wau_stickiness",
-    "revenue_pareto",
-    "repurchase_interval_histogram",
-    "source_lang_chi2",
-    "open_order_aging",
-    "worst_error_windows_top10",
-    "part_supplier_hhi_top20",
-    "new_vs_returning_users",
-    "vocab_growth_curve",
-    "session_activity_lift",
-    "weighted_median_acctbal",
-    "user_behavior_quadrants",
-    "customer_rfm_segments",
-    "zipf_fit",
-    "kmeans_silhouette",
-    "embedding_norm_audit",
-    "stream_hll_user_registers",
-    "user_triage_report",
-]
-ROUND5C_COUNT: list = []
-
-# Round-7 wave: the ANN acceptance harness (recall@5 + candidate
-# budgets for exact/srp/ivf in one report — exercises the banded-LSH
-# join, the unrolled-Lloyd IVF probe, and the broadcast exact scan)
-ROUND7_COLLECT = [
-    "ann_recall_report",
-    "inverted_postings",
-    "phrase_search_hits",
-    "embedding_sq8_audit",
-    "key_skew_audit",
-    "split_leakage_repair",
-    "stream_token_df",
-    "hll_set_expressions",
-    "rule_pr_auc",
-    "stream_markov_ordered",
-]
-ROUND7_COUNT: list = []
-
-# Round-7 curation wave ("round7b_total" — own group so round7_total
-# stays comparable within the round): perplexity quality gate, DSIR
-# importance weights, hard-negative mining, clustering coefficient.
-ROUND7B_COLLECT = [
-    "doc_perplexity_filter",
-    "dsir_importance_weights",
-    "hard_negative_mining",
-    "local_clustering_coefficient",
-]
-ROUND7B_COUNT: list = []
-
-# Round-7 retrieval/statistics wave ("round7c_total"): hybrid RRF,
-# nDCG eval, MMR re-rank, Poisson bootstrap, conformal threshold,
-# CUPED lift, vocabulary richness, group k-fold, containment dedup,
-# isotonic calibration.
-ROUND7C_COLLECT = [
-    "rrf_hybrid_search",
-    "ndcg_retrieval_eval",
-    "mmr_diversified_topk",
-    "bootstrap_revenue_ci",
-    "conformal_price_threshold",
-    "cuped_adjusted_lift",
-    "vocab_richness_report",
-    "group_kfold_assignment",
-    "containment_near_dups",
-    "isotonic_calibration",
-    "kaplan_meier_conversion",
-    "mann_whitney_variant_test",
-    "ks_split_drift",
-    "tokenizer_fertility",
-    "incremental_corpus_dedup",
-    "stream_incremental_dedup",
-    "regression_metrics_report",
-]
-ROUND7C_COUNT: list = []
-
-# Round-7 analytics wave ("round7d_total"): within-nation Gini,
-# basket association rules, binned Kendall tau-b, sweep-line peak
-# concurrency, readability panel, template-prefix boilerplate screen.
-ROUND7D_COLLECT = [
-    "nation_revenue_gini",
-    "brand_assoc_rules_top20",
-    "kendall_tau_binned",
-    "peak_concurrency_by_type",
-    "readability_report",
-    "template_prefix_dups",
-    "stream_peak_concurrency",
-    "user_twap_value",
-    "ohlc_hourly_bars",
-    "cohort_ltv_curve",
-    "session_path_top10",
-    "minhash_calibration_report",
-    "cdc_last_writer_state",
-    "stream_cdc_state",
-    "revenue_bridge_wow",
-    "abc_xyz_parts",
-    "neyman_allocation_plan",
-    "neyman_quota_sample",
-]
-ROUND7D_COUNT: list = []
-
-# Round-7e audit/robust-stats wave ("round7e_total"): Benford
-# first-digit audit, activity x weekend chi-square, MAD outlier
-# screen, Theil-Sen robust trend, segment x year pivot, FK audit.
-ROUND7E_COLLECT = [
-    "benford_digit_audit",
-    "activity_weekend_chi2",
-    "value_mad_outliers",
-    "theil_sen_user_trend",
-    "segment_year_pivot",
-    "referential_integrity_audit",
-    "stream_funnel_ordered",
-    "mrr_retrieval_eval",
-    "welch_t_variant_test",
-    "diff_in_diff_purchases",
-    "variant_quantile_effects",
-    "sprt_daily_monitor",
-    "seasonal_naive_backtest",
-    "holt_linear_daily",
-    "props_variant_stats",
-    "funnel_conversion_24h",
-    "linear_touch_attribution",
-    "session_entry_exit_report",
-    "revenue_retention_waterfall",
-    "fulfillment_cycle_percentiles",
-]
-ROUND7E_COUNT: list = []
-
-# Round-8 wave ("round8_total"): real media decode over planted
-# blobs, portable KMV quantile sketch rollup, exact power-method PCA.
-ROUND8_COLLECT = [
-    "media_decode_stats",
-    "kmv_value_quantiles",
-    "user_pca_projection",
-    "stream_kmv_quantiles",
-    "audio_frame_features",
-    "image_tile_stats",
-    "chunked_documents",
-]
-ROUND8_COUNT: list = []
-
-# Round-9 wave ("round9_total"): real-decode histogram/frame/resize
-# conversions, two-pass Misra-Gries refinement, hash-mode SMOTE
-# counts, PCA-init neighbor embedding, LZW GIF decode, and the
-# format-matrix round-trips (JSONL/ORC/CSV/partitioned sinks).
-ROUND9_COLLECT = [
-    "media_features",
-    "media_frame_sample",
-    "media_resize_stats",
-    "heavy_hitter_tokens",
-    "smote_resampled_counts",
-    "tsne_substitute_projection",
-    "gif_decode_stats",
-    "events_jsonl_roundtrip",
-    "orders_orc_roundtrip",
-    "documents_csv_gauntlet",
-    "events_partitioned_prune",
-    "schema_evolution_union",
-    "compression_codec_report",
-    "stream_jsonl_ingest",
-    "compacted_scan_digest",
-    "schema_drift_report",
-    "documents_text_roundtrip",
-    "pq_quantization_report",
-    "pq_adc_topk",
-    "hyperball_reach_report",
-    "truncated_embedding_recall",
-    "png_decode_stats",
-    "ivfpq_adc_topk",
-]
-ROUND9_COUNT: list = []
-
-# Round-11 wave ("round11_total"): the baseline JPEG decode family
-# (gray / 4:4:4 / 4:2:0), exact substring-level dedup spans, the
-# portable E2LSH ANN, and theta-sketch set intersection (batch +
-# streaming twin).
-ROUND11_COLLECT = [
-    "jpeg_decode_stats",
-    "jpeg_color_decode_stats",
-    "jpeg420_decode_stats",
-    "lsh_ann_topk",
-    "theta_user_overlap",
-    "stream_theta_overlap",
-]
-ROUND11_COUNT = [
-    "repeated_substring_spans",
-]
-
-# Round-12 wave ("round12_total"): restart-interval JPEG, the
-# md5-position-sampled decode digests, MJPEG-in-AVI video, and the
-# fixed-weights scoring twins for the two RNG detectors.
-ROUND12_COLLECT = [
-    "jpeg_restart_decode_stats",
-    "jpeg_progressive_decode_stats",
-    "jpeg_progressive_color_decode_stats",
-    "jpeg_progressive_420_decode_stats",
-    "jpeg_color_sampled_digest",
-    "jpeg420_sampled_digest",
-    "avi_mjpeg_decode_stats",
-    "tiff_decode_stats",
-    "autoencoder_fixed_anomalies",
-    "ocsvm_fixed_anomalies",
-]
-ROUND12_COUNT: list = []
+# Queries whose output grows with the data are consumed with count();
+# every other query is collected. embedding_ann_near_dups and
+# near_dup_groups stay collected although their output is large: both
+# end in a row-preserving left join whose right side is aggregate-unique,
+# so a count() lets Catalyst prune the entire scoring/closure subtree
+# and times an empty plan.
+COUNT = {
+    "two_hop_resource_paths", "supplier_running_revenue",
+    "top_orders_per_customer", "exact_dedup_groups", "token_counts",
+    "minhash_sig_near_dups", "event_sessions", "benchmark_decontamination",
+    "cohort_retention", "unigram_logprob_scores",
+    "customer_order_distribution", "returned_items_top20",
+    "kmeans_fixed_anomalies", "corpus_curation_pipeline",
+    "bpe_subword_freqs", "time_to_next_purchase", "stream_session_windows",
+    "dup_span_stats", "repeated_substring_spans",
+}
 
 # Always isolated-re-measured regardless of in-run rank: queries whose
 # in-run numbers have previously disagreed with quiet-box reruns.
 ISOLATE_ALWAYS = ["stream_topk_users"]
 
-# One row per bench group: (json label, collect-list, count-list).
-# A new round adds ONE tuple here — the timing loop, group totals,
-# and the isolated-rerun count_set all derive from it.
-GROUP_SPECS = [
-    ("pipeline_total", PIPELINE_COLLECT, PIPELINE_COUNT),
-    ("extended_total", EXTENDED_COLLECT, EXTENDED_COUNT),
-    ("round4_total", ROUND4_COLLECT, ROUND4_COUNT),
-    ("round5_total", ROUND5_COLLECT, ROUND5_COUNT),
-    ("round5b_total", ROUND5B_COLLECT, ROUND5B_COUNT),
-    ("round5c_total", ROUND5C_COLLECT, ROUND5C_COUNT),
-    ("round7_total", ROUND7_COLLECT, ROUND7_COUNT),
-    ("round7b_total", ROUND7B_COLLECT, ROUND7B_COUNT),
-    ("round7c_total", ROUND7C_COLLECT, ROUND7C_COUNT),
-    ("round7d_total", ROUND7D_COLLECT, ROUND7D_COUNT),
-    ("round7e_total", ROUND7E_COLLECT, ROUND7E_COUNT),
-    ("round8_total", ROUND8_COLLECT, ROUND8_COUNT),
-    ("round9_total", ROUND9_COLLECT, ROUND9_COUNT),
-    ("round11_total", ROUND11_COLLECT, ROUND11_COUNT),
-    ("round12_total", ROUND12_COLLECT, ROUND12_COUNT),
-]
+# The disk-persisted indexes: their queries are build-once/search-only
+# by declared contract, so their in-group medians are warm-index
+# numbers; deleting the index and timing one invocation records what
+# the first run on a fresh dataset costs.
+COLD_BUILD = [("incremental_corpus_dedup", advanced._dedup_index_path),
+              ("ivfpq_adc_topk", advanced._ivfpq_index_path)]
+
+
+def time_query(spark, queries: dict, name: str) -> float:
+    """Wall seconds to build query ``name`` and consume its result.
+
+    The ML detector memo exists for intra-app ensemble consistency, but
+    a timed run must never measure a cache lookup, so it is cleared
+    first and every run recomputes from the parquet inputs.
+    """
+    ml_queries._memo.clear()
+    start = time.perf_counter()
+    df = queries[name](spark, SF_DIR)
+    df.count() if name in COUNT else df.collect()
+    return time.perf_counter() - start
+
+
+def time_sorted3(spark, queries: dict, name: str) -> list[float]:
+    """Three timed runs, sorted: [min, median, max]. Single-run numbers
+    on a shared box jitter ±20%; the median is the steady-state
+    estimate and the min the quiet-box one."""
+    return sorted(time_query(spark, queries, name) for _ in range(3))
+
+
+def print_subset(spark, queries: dict, names: list[str]) -> None:
+    total_med = total_min = 0.0
+    for name in names:
+        runs = time_sorted3(spark, queries, name)
+        total_med += runs[1]
+        total_min += runs[0]
+        print(f"{name:42s} med {runs[1]:7.3f}  min {runs[0]:7.3f}  "
+              f"max {runs[2]:7.3f}")
+    print(f"{'TOTAL':42s} med {total_med:7.3f}  min {total_min:7.3f}")
 
 
 def main() -> None:
-    spark = get_spark("bench")
+    names = sys.argv[1:]
     queries = all_queries()
+    unknown = [n for n in names if n not in queries]
+    if unknown:
+        sys.exit(f"unknown query name(s): {' '.join(unknown)}")
+    spark = get_spark("bench")
     # warm the JVM (codegen, Arrow, parquet reader) once so per-query
     # timings reflect steady state, not first-query class loading
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     queries["after_hours_top10"](spark, SF_DIR).limit(1).collect()
-    # median of 3 runs per query: single-run numbers on a shared box
-    # jitter ±20%; the median is the standard steady-state estimate.
-    # min/max are kept too (r11 verdict ask #5): the min-sum is the
-    # quiet-box estimate — a 16% driver-vs-quiet spread on identical
-    # trees kept muddying round-over-round comparison, and the spread
-    # lets a reviewer adjudicate box noise without re-running.
+    if names:
+        print_subset(spark, queries, names)
+        return
+
+    # min/max are kept beside the median: the spread tells box noise
+    # from a real change without re-running.
     spread: dict[str, list[float]] = {}
-
-    def median_time(name: str, count_it: bool) -> float:
-        fn = queries[name]
-        runs = []
-        for _ in range(3):
-            # honest medians (r12 verdict ask #4): the ML detector memo
-            # exists for intra-app ensemble consistency, but a timed
-            # run must never measure a cache lookup — clear it so every
-            # rep recomputes from the parquet inputs. (No memoized
-            # query is in a bench group today; this is the guard.)
-            ml_queries._memo.clear()
-            start = time.perf_counter()
-            df = fn(spark, SF_DIR)
-            df.count() if count_it else df.collect()
-            runs.append(time.perf_counter() - start)
-        runs.sort()
-        spread[name] = [round(runs[0], 3), round(runs[1], 3),
-                        round(runs[2], 3)]
-        return round(runs[1], 3)
-
     timings: dict[str, float] = {}
-    for name in HEADLINE_COLLECT + HEADLINE_COUNT:
-        timings[name] = median_time(name, name in HEADLINE_COUNT)
 
-    # one-time COLD-build numbers for the disk-persisted indexes (r12
-    # verdict ask #4): the dedup / IVF-PQ index queries are
-    # build-once/search-only by declared contract, so their steady-state
-    # medians below are warm-index numbers; deleting the index and
-    # timing one invocation records what the first run on a fresh
-    # dataset costs. Runs AFTER the headline (its 25 s of index-write
-    # work polluted the contract value when it ran first — measured
-    # headline 11.5 in-run vs 9.6 min-sum) and BEFORE the groups, so
-    # the in-group reps stay warm (comparable with every prior round's
-    # medians).
+    def time_median(name: str) -> None:
+        spread[name] = [round(t, 3)
+                        for t in time_sorted3(spark, queries, name)]
+        timings[name] = spread[name][1]
+
+    for name in HEADLINE:
+        time_median(name)
+    total = round(sum(timings[n] for n in HEADLINE), 3)
+    total_min = round(sum(spread[n][0] for n in HEADLINE), 3)
+    total_max = round(sum(spread[n][2] for n in HEADLINE), 3)
+
+    # Cold builds run AFTER the headline (their index writes inflated
+    # the headline 9.6 -> 11.5 s when they ran first) and BEFORE the
+    # groups, so the in-group reps stay warm-index numbers.
     cold: dict[str, float] = {}
-    for cold_name, path_fn in (
-            ("incremental_corpus_dedup", advanced._dedup_index_path),
-            ("ivfpq_adc_topk", advanced._ivfpq_index_path)):
+    for name, path_fn in COLD_BUILD:
         shutil.rmtree(path_fn(SF_DIR), ignore_errors=True)
-        start = time.perf_counter()
-        queries[cold_name](spark, SF_DIR).collect()
-        cold[f"{cold_name}_coldbuild"] = round(
-            time.perf_counter() - start, 3)
-    total = round(sum(timings.values()), 3)
-    total_min = round(sum(spread[n][0]
-                          for n in HEADLINE_COLLECT + HEADLINE_COUNT), 3)
-    total_max = round(sum(spread[n][2]
-                          for n in HEADLINE_COLLECT + HEADLINE_COUNT), 3)
+        cold[f"{name}_coldbuild"] = round(
+            time_query(spark, queries, name), 3)
+
     groups: dict[str, float] = {}
-    for label, collect, count in GROUP_SPECS:
-        for name in collect + count:
-            timings[name] = median_time(name, name in count)
-        groups[label] = round(sum(timings[n] for n in collect + count), 3)
+    for label, members in GROUPS.items():
+        for name in members:
+            time_median(name)
+        groups[label] = round(sum(timings[n] for n in members), 3)
+
     # Isolated re-measure of the 10 slowest queries (plus the
     # ISOLATE_ALWAYS watchlist): a fresh spark.newSession() per query,
-    # after every other group finished. In-run medians on a shared box
-    # have repeatedly produced phantom regressions (r3 decontamination,
-    # r4 threat family, r7 stream_markov 7.1 s in-run vs 1.9 s
-    # isolated); recording a second, quieter sample alongside lets a
-    # reviewer adjudicate noise vs real regression without re-running.
-    count_set = set(HEADLINE_COUNT)
-    for _, _, count in GROUP_SPECS:
-        count_set.update(count)
+    # after every group finished. In-run medians on a shared box have
+    # repeatedly produced phantom regressions (stream_markov 7.1 s
+    # in-run vs 1.9 s isolated); a second, quieter sample separates
+    # noise from a real regression without re-running.
     slowest = sorted(timings, key=timings.get, reverse=True)[:10]
     slowest += [n for n in ISOLATE_ALWAYS if n not in slowest]
-    isolated: dict[str, float] = {}
-    for name in slowest:
-        fresh = spark.newSession()
-        fn = queries[name]
-        runs = []
-        for _ in range(3):
-            start = time.perf_counter()
-            df = fn(fresh, SF_DIR)
-            df.count() if name in count_set else df.collect()
-            runs.append(time.perf_counter() - start)
-        isolated[name] = round(sorted(runs)[1], 3)
+    isolated = {name: round(time_sorted3(spark.newSession(), queries,
+                                         name)[1], 3)
+                for name in slowest}
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    # The full ~150-query timing map overflowed the driver's tail capture
-    # in round 5 (BENCH_r05.json: parsed=null, the line was truncated
-    # mid-string).  Per-query detail goes to BENCH_DETAIL.json; the ONE
-    # printed line stays minimal: headline total + headline per-query
-    # timings + group totals.
+    # The full per-query map once overflowed a tail capture of stdout
+    # (the line was truncated mid-string), so per-query detail goes to
+    # BENCH_DETAIL.json and the ONE printed line stays minimal:
+    # headline total + headline per-query timings + group totals.
     with open("BENCH_DETAIL.json", "w") as fh:
         json.dump({"metric": "headline_queries_total", "value": total,
                    "value_min": total_min, "value_max": total_max,
@@ -495,7 +288,7 @@ def main() -> None:
         "value_min": total_min,
         "value_max": total_max,
         "unit": "sec",
-        "queries": {n: timings[n] for n in HEADLINE_COLLECT + HEADLINE_COUNT},
+        "queries": {n: timings[n] for n in HEADLINE},
         **groups,
         "cold_build": cold,
         "sf": float(sf),

@@ -31,6 +31,8 @@ SF_DIR = "/root/testdata/sf0.01"
 EXPECTED_NONDETERMINISTIC: dict[str, str] = {}
 
 
+# Not check_all._canon: this one stringifies object columns, while
+# check_all must fail on them as the correctness gate does.
 def _canon(pdf: pd.DataFrame, float_round: int = 6) -> pd.DataFrame:
     pdf = pdf[sorted(pdf.columns)]
     for c in pdf.columns:

@@ -13,10 +13,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import SF_DIR  # noqa: E402
 from threat_detection_nosql_spark.queries import all_queries  # noqa: E402
 from threat_detection_nosql_spark.session import get_spark  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> int:

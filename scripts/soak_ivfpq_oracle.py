@@ -21,30 +21,16 @@ Usage: python scripts/soak_ivfpq_oracle.py [soak_dir]   (default
 """
 from __future__ import annotations
 
-import hashlib
 import os
 import sys
 import time
 
 import duckdb
-import pandas as pd
+
+from check_all import _canon, _hash
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-
-def _canon(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf[sorted(pdf.columns)]
-    for c in pdf.columns:
-        if pdf[c].dtype.kind == "f":
-            pdf[c] = pdf[c].round(6)
-    return pdf.sort_values(list(pdf.columns),
-                           kind="mergesort").reset_index(drop=True)
-
-
-def _hash(pdf: pd.DataFrame) -> str:
-    return hashlib.md5(
-        pdf.to_csv(index=False, float_format="%.6f").encode()).hexdigest()
 
 
 def main() -> int:

@@ -15,21 +15,19 @@ from pyspark.sql import SparkSession
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
-def get_spark(app_name: str = "threat_detection_nosql_spark",
-              shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "threat_detection_nosql_spark") -> SparkSession:
     """Build (or reuse) a SparkSession.
 
     Local mode uses ``local[$SPARK_GRAFT_CPUS]``; on a real cluster the
     master/memory settings come from spark-submit and these configs are
     harmless. AQE handles runtime coalescing and skew joins, so a fixed
-    ``spark.sql.shuffle.partitions`` is only the upper bound pre-AQE.
+    ``spark.sql.shuffle.partitions`` (one per core) is only the upper
+    bound pre-AQE.
     """
-    n_shuffle = shuffle_partitions or int(os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS", _DEFAULT_CPUS))
     builder = (
         SparkSession.builder
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(n_shuffle))
+        .config("spark.sql.shuffle.partitions", _DEFAULT_CPUS)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -934,7 +934,10 @@ def dedup_matches_agg(docs_stream: DataFrame,
     # is bounded by the trigger while the corpus side is the whole
     # persisted index — broadcasting new_bands means the corpus is
     # never shuffled by bkey (the before-plan shuffled BOTH sides into
-    # a sort-merge join; row-identical, verified hash-equal)
+    # a sort-merge join; row-identical, verified hash-equal).
+    # The bound is a contract on the trigger, not a guard: the first
+    # batch after downtime, or availableNow over a backlog, carries the
+    # whole backlog and is broadcast unbounded.
     return (F.broadcast(new_bands).join(old_bands, "bkey")
             .filter(agree >= F.lit(8))
             .groupBy("doc_id")
