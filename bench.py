@@ -9,7 +9,8 @@ what a consumer does with each query).
 
 Usage:
     python bench.py              # full run: JSON line + BENCH_DETAIL.json
-    python bench.py NAME...      # subset: med/min/max table for NAMEs
+    python bench.py NAME...      # subset: med/min/max table for NAMEs,
+                                 # with the classes compiled in 3 reps
 """
 
 from __future__ import annotations
@@ -201,14 +202,24 @@ def time_sorted3(spark, queries: dict, name: str) -> list[float]:
     return sorted(time_query(spark, queries, name) for _ in range(3))
 
 
+def compiles(spark) -> int:
+    """Janino compilations so far in this JVM (Spark's CodegenMetrics).
+    A generated class found in the codegen cache is not counted, so a
+    warm query that still compiles is recompiling evicted or unstable
+    code."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def print_subset(spark, queries: dict, names: list[str]) -> None:
     total_med = total_min = 0.0
     for name in names:
+        before = compiles(spark)
         runs = time_sorted3(spark, queries, name)
         total_med += runs[1]
         total_min += runs[0]
         print(f"{name:42s} med {runs[1]:7.3f}  min {runs[0]:7.3f}  "
-              f"max {runs[2]:7.3f}")
+              f"max {runs[2]:7.3f}  compiles {compiles(spark) - before:4d}")
     print(f"{'TOTAL':42s} med {total_med:7.3f}  min {total_min:7.3f}")
 
 

@@ -36,9 +36,15 @@ def assemble_features(df: DataFrame, cols: list[str] | None = None,
             or [f.name for f in df.schema.fields
                 if isinstance(f.dataType, T.NumericType)
                 and f.name not in exclude])
-    df = df.na.fill(0.0, subset=cols)
-    return VectorAssembler(inputCols=cols, outputCol=out_col) \
-        .transform(df)
+    # VectorAssembler casts a non-double input under an alias that holds
+    # its random uid, and the alias lands in the generated code. It is
+    # given double copies instead, so every build compiles the same
+    # source (and hits the codegen cache); the copies are dropped, so
+    # the returned columns keep their types.
+    doubles = {f"{c}_double": F.col(c).cast("double") for c in cols}
+    df = df.na.fill(0.0, subset=cols).withColumns(doubles)
+    return (VectorAssembler(inputCols=list(doubles), outputCol=out_col)
+            .transform(df).drop(*doubles))
 
 
 def scale_features(df: DataFrame, in_col: str = "features",

@@ -23,6 +23,18 @@ def get_spark(app_name: str = "threat_detection_nosql_spark") -> SparkSession:
     harmless. AQE handles runtime coalescing and skew joins, so a fixed
     ``spark.sql.shuffle.partitions`` (one per core) is only the upper
     bound pre-AQE.
+
+    Spark compiles its generated code (each whole-stage-codegen stage,
+    projection, predicate) with Janino and keeps the classes in an LRU
+    of ``spark.sql.codegen.cache.maxEntries``. Spark's 100 is smaller
+    than one threat-suite pass, so a suite run again evicts every class
+    before its next use and recompiles nearly all of them; 1000 holds
+    the working set (numbers at the conf below).
+
+    Static confs such as this one apply only when this call creates the
+    SparkContext. ``getOrCreate`` on a running context (one started by
+    spark-submit, a notebook or another builder) keeps that context's
+    own value; the runtime confs here still apply.
     """
     builder = (
         SparkSession.builder
@@ -39,6 +51,11 @@ def get_spark(app_name: str = "threat_detection_nosql_spark") -> SparkSession:
         # no nanos type — read as long, converted in sources.readers.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        # static conf, sized from the traffic rather than tuned: ~145
+        # distinct classes per threat-suite pass (73 per stream-twins
+        # pass); with 100 entries every warm suite pass recompiled ~130.
+        # At ~23 KB of metaspace per class a full cache is ~25 MB.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         builder = (builder
