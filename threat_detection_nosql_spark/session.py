@@ -35,6 +35,29 @@ def get_spark(app_name: str = "threat_detection_nosql_spark") -> SparkSession:
     SparkContext. ``getOrCreate`` on a running context (one started by
     spark-submit, a notebook or another builder) keeps that context's
     own value; the runtime confs here still apply.
+
+    Local sessions write streaming checkpoints (offsets, commits,
+    source log, state-store ``*.delta`` files) through Hadoop's
+    ``FileSystem`` API rather than Spark's default ``FileContext``.
+    Every checkpoint file is written to a temp name and renamed. A
+    ``FileContext`` rename on the local filesystem looks up the link
+    status of its paths, and without a native ``libhadoop`` Hadoop
+    forks ``readlink`` for that, about three times per rename: 672
+    ``readlink`` processes in one warm stream-twins pass. The
+    ``FileSystem`` rename is ``File.renameTo``, one rename(2), and
+    forks nothing. The 223 ``chmod`` forks per pass, from
+    ``setPermission`` on each created file, are the same under both.
+
+    ``FileContext`` renames with "fail if the target exists" in one
+    atomic step; the ``FileSystem`` manager checks ``exists()`` and
+    then renames. The gap matters only to two writers on one
+    checkpoint at once. A local session has one driver, and its
+    ``StreamingQueryManager`` keeps one run per query id active: a
+    second ``start()`` on a checkpoint stops the first run before it
+    starts (Spark's default) or is refused
+    (``spark.sql.streaming.stopActiveRunOnRestart=false``). A cluster
+    session can have writers in other drivers, on a store where the
+    atomic rename counts, so it keeps ``FileContext``.
     """
     builder = (
         SparkSession.builder
@@ -61,7 +84,12 @@ def get_spark(app_name: str = "threat_detection_nosql_spark") -> SparkSession:
         builder = (builder
                    .master(f"local[{_DEFAULT_CPUS}]")
                    .config("spark.driver.memory",
-                           os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")))
+                           os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+                   # one driver, so no second writer can race a rename;
+                   # FileContext forked ~3 readlink per checkpoint file
+                   .config("spark.sql.streaming.checkpointFileManagerClass",
+                           "org.apache.spark.sql.execution.streaming."
+                           "checkpointing.FileSystemBasedCheckpointFileManager"))
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
