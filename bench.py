@@ -23,6 +23,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from threat_detection_nosql_spark import cds  # noqa: E402
 from threat_detection_nosql_spark.queries import advanced  # noqa: E402
 from threat_detection_nosql_spark.queries import all_queries  # noqa: E402
 from threat_detection_nosql_spark.queries import ml_queries  # noqa: E402
@@ -229,7 +230,12 @@ def main() -> None:
     unknown = [n for n in names if n not in queries]
     if unknown:
         sys.exit(f"unknown query name(s): {' '.join(unknown)}")
+    t0 = time.perf_counter()
     spark = get_spark("bench")
+    # the JVM launch: "used" maps the CDS archive, "wrote" dumps one at
+    # exit, "off" loads every class from the jars
+    session = {"launch_s": round(time.perf_counter() - t0, 3),
+               "cds": cds.mode(spark)}
     # warm the JVM (codegen, Arrow, parquet reader) once so per-query
     # timings reflect steady state, not first-query class loading
     spark.range(1_000_000).selectExpr("sum(id)").collect()
@@ -291,8 +297,8 @@ def main() -> None:
                    "value_min": total_min, "value_max": total_max,
                    "unit": "sec", "queries": timings,
                    "spread_min_med_max": spread, **groups,
-                   "cold_build": cold,
-                   "isolated": isolated, "sf": float(sf)}, fh, indent=1)
+                   "cold_build": cold, "isolated": isolated,
+                   "session": session, "sf": float(sf)}, fh, indent=1)
     print(json.dumps({
         "metric": "headline_queries_total",
         "value": total,

@@ -271,3 +271,70 @@ def test_eps_pairs_exact_matches_on_fixture(spark, fixture):
     pairs = {(r.a, r.b) for r in rows}
     assert pairs and all(a != b for a, b in pairs)
     assert all((b, a) in pairs for a, b in pairs)
+
+
+def test_memo_miss_unpersists_what_dropped_entries_cached(spark):
+    """Timed runs clear the detector memo before every query. The
+    feature frame and detector output a dropped entry cached are
+    unpersisted at the next miss, so repeated runs hold the cache at
+    the size one run leaves, with the same rows."""
+    from tests.conftest import SF_SMALL
+    from threat_detection_nosql_spark.queries import ml_queries as MQ
+
+    sc = spark.sparkContext
+    # only RDDs made from here on: Spark's cleaner drops unreachable
+    # RDDs of earlier tests whenever the JVM collects garbage
+    first_id = sc.emptyRDD().id()
+    counts, results = [], []
+    for _ in range(3):
+        MQ._memo.clear()
+        rows = MQ.mahalanobis_anomalies(spark, SF_SMALL).collect()
+        counts.append(sum(1 for i in sc._jsc.sc().getRDDStorageInfo()
+                          if i.id() > first_id))
+        results.append(sorted(
+            tuple(round(v, 9) if isinstance(v, float) else v for v in r)
+            for r in rows))
+    assert counts == [counts[0]] * 3
+    assert results == [results[0]] * 3
+
+
+def test_detectors_on_empty_and_single_user_features(spark, tmp_path):
+    """On an events table with no rows every detector returns no rows,
+    with the columns it returns on a one-user table; a detector that
+    cannot fit one user still raises."""
+    import pyarrow.parquet as pq
+
+    from tests.conftest import SF_SMALL
+    from threat_detection_nosql_spark.queries import ml_queries as MQ
+
+    events = pq.read_table(f"{SF_SMALL}/events.parquet")
+    dirs = {}
+    for n in (0, 1):
+        dirs[n] = tmp_path / f"events{n}"
+        dirs[n].mkdir()
+        pq.write_table(events.slice(0, n), dirs[n] / "events.parquet")
+    queries = {"kmeans": MQ.kmeans_anomalies,
+               "iforest": MQ.iforest_anomalies,
+               "pca": MQ.pca_reconstruction_anomalies,
+               "maha": MQ.mahalanobis_anomalies,
+               "ae": MQ.autoencoder_anomalies,
+               "ocsvm": MQ.ocsvm_anomalies,
+               "dbscan": MQ.dbscan_noise_anomalies}
+    MQ._memo.clear()
+    empty = {}
+    for name, fn in queries.items():
+        empty[name] = fn(spark, str(dirs[0]))
+        assert empty[name].count() == 0
+    ens = MQ.ensemble_anomalies(spark, str(dirs[0]))
+    assert ens.count() == 0
+    assert {"votes", "ensemble_anomaly", "ensemble_score"} <= set(ens.columns)
+    # k=2 clusters and a covariance need two users: those fits still
+    # fail, and the failure is not turned into an empty result
+    for name, fn in queries.items():
+        if name in ("kmeans", "pca"):
+            with pytest.raises(Exception):
+                fn(spark, str(dirs[1]))
+            continue
+        one = fn(spark, str(dirs[1]))
+        assert one.count() == 1
+        assert one.dtypes == empty[name].dtypes, name

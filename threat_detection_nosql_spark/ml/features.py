@@ -51,22 +51,36 @@ def scale_features(df: DataFrame, in_col: str = "features",
                    out_col: str = "scaled") -> DataFrame:
     """M1: z-score scaling (withMean+withStd), the sklearn
     StandardScaler equivalent (`Comparaison_ML.py:127-128`)."""
+    from py4j.protocol import Py4JJavaError
     from pyspark.ml.feature import StandardScaler
     scaler = StandardScaler(inputCol=in_col, outputCol=out_col,
                             withMean=True, withStd=True)
-    return scaler.fit(df).transform(df)
+    try:
+        model = scaler.fit(df)
+    except Py4JJavaError:
+        # the fit fails on zero rows, which scale to zero rows; asked
+        # only after a failure, so a fit that works runs no extra job
+        if not df.isEmpty():
+            raise
+        return df.withColumn(out_col, F.col(in_col))
+    return model.transform(df)
 
 
-def scaled_user_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+def scaled_user_features(spark: SparkSession, sf_dir: str,
+                         pins: list[DataFrame] | None = None) -> DataFrame:
     """End-to-end: events → per-user feature matrix → assembled +
     scaled vector column. The DataFrame every detector consumes.
 
     The assembled matrix is cached before the scaler fit, so the fit's
     job fills the cache and the detectors' jobs read it: the feature
-    build runs once, not once for the fit and again for the detector."""
+    build runs once, not once for the fit and again for the detector.
+    ``pins``, when given, receives that cached frame, so a caller that
+    drops the result can unpersist it."""
     from threat_detection_nosql_spark.queries.threat import user_features
-    feats = user_features(spark, sf_dir)
-    return scale_features(assemble_features(feats).cache())
+    assembled = assemble_features(user_features(spark, sf_dir)).cache()
+    if pins is not None:
+        pins.append(assembled)
+    return scale_features(assembled)
 
 
 def synthetic_anomaly_fixture(spark: SparkSession, n: int = 200,
