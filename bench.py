@@ -10,7 +10,8 @@ what a consumer does with each query).
 Usage:
     python bench.py              # full run: JSON line + BENCH_DETAIL.json
     python bench.py NAME...      # subset: med/min/max table for NAMEs,
-                                 # with the classes compiled in 3 reps
+                                 # with the classes compiled and the
+                                 # py4j round trips made in 3 reps
 """
 
 from __future__ import annotations
@@ -212,15 +213,32 @@ def compiles(spark) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
+def count_round_trips(spark) -> list[int]:
+    """From now on, count this process's py4j gateway round trips (each
+    Python -> JVM call: DataFrame building, conf reads, actions) into
+    the returned one-element list."""
+    client = type(spark.sparkContext._gateway._gateway_client)
+    send, calls = client.send_command, [0]
+
+    def counted(self, *args, **kwargs):
+        calls[0] += 1
+        return send(self, *args, **kwargs)
+
+    client.send_command = counted
+    return calls
+
+
 def print_subset(spark, queries: dict, names: list[str]) -> None:
     total_med = total_min = 0.0
+    trips = count_round_trips(spark)
     for name in names:
-        before = compiles(spark)
+        before, trips_before = compiles(spark), trips[0]
         runs = time_sorted3(spark, queries, name)
         total_med += runs[1]
         total_min += runs[0]
         print(f"{name:42s} med {runs[1]:7.3f}  min {runs[0]:7.3f}  "
-              f"max {runs[2]:7.3f}  compiles {compiles(spark) - before:4d}")
+              f"max {runs[2]:7.3f}  compiles {compiles(spark) - before:4d}"
+              f"  py4j {trips[0] - trips_before:6d}")
     print(f"{'TOTAL':42s} med {total_med:7.3f}  min {total_min:7.3f}")
 
 

@@ -111,3 +111,59 @@ def test_first_ntz_read_is_utc_under_another_session_zone(spark, tmp_path):
     ids = tbl["event_id"].to_pylist()
     assert micros == dict(zip(ids, (t.value for t in tbl["ts"])))
     assert hours == dict(zip(ids, (t.as_py().hour for t in tbl["ts"])))
+
+
+def test_repeat_log_calls_return_the_same_view(spark):
+    first = activity_log(spark, SF_SMALL)
+    assert activity_log(spark, SF_SMALL) is first
+
+
+def test_rewritten_events_give_a_new_log_view(spark, tmp_path):
+    path = tmp_path / "events.parquet"
+    pq.write_table(_events(100), path)
+    first = activity_log(spark, str(tmp_path))
+    assert first.count() == 100
+    pq.write_table(_events(250), path)
+    second = activity_log(spark, str(tmp_path))
+    assert second is not first
+    assert second.count() == 250
+
+
+def test_log_view_is_rebuilt_in_a_new_session_zone(spark, tmp_path):
+    """hour_of_day takes the session zone when the view is analyzed,
+    so a zone change gives a new view. TIMESTAMP(NANOS) files read as
+    longs here, so no UTC pin (see the test above) applies."""
+    from datetime import timezone
+    from zoneinfo import ZoneInfo
+
+    tbl = _events(50)
+    ts = pa.array([t.value * 1000 for t in tbl["ts"]], pa.timestamp("ns"))
+    pq.write_table(tbl.set_column(1, "ts", ts), tmp_path / "events.parquet")
+    conf, zone = "spark.sql.session.timeZone", "America/New_York"
+    saved = spark.conf.get(conf)
+
+    def hours(tz):
+        spark.conf.set(conf, tz)
+        log = activity_log(spark, str(tmp_path))
+        return log, {r.event_id: r.hour_of_day for r in
+                     log.select("event_id", "hour_of_day").collect()}
+
+    try:
+        utc, utc_hours = hours("UTC")
+        there, there_hours = hours(zone)
+    finally:
+        spark.conf.set(conf, saved)
+    assert there is not utc
+    at = {i: t.as_py().replace(tzinfo=timezone.utc)
+          for i, t in zip(tbl["event_id"].to_pylist(), tbl["ts"])}
+    assert utc_hours == {i: t.hour for i, t in at.items()}
+    assert there_hours == {i: t.astimezone(ZoneInfo(zone)).hour
+                           for i, t in at.items()}
+
+
+def test_new_session_gets_its_own_log_view(spark):
+    other = spark.newSession()
+    mine = activity_log(spark, SF_SMALL)
+    theirs = activity_log(other, SF_SMALL)
+    assert theirs is not mine
+    assert theirs.sparkSession is other

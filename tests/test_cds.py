@@ -4,7 +4,8 @@
 when no archive exists yet and with `-XX:SharedArchiveFile` once one
 does (`threat_detection_nosql_spark.cds`). The first test launches two
 child sessions against an empty cache; the others check, without a
-JVM, when CDS is turned off and how finished dumps are adopted.
+JVM, when CDS is turned off, how finished dumps are adopted and how
+one launch at a time claims the dump.
 """
 
 from __future__ import annotations
@@ -47,10 +48,13 @@ def _dead_pid() -> int:
 
 def test_second_launch_maps_the_archive_the_first_wrote(tmp_path,
                                                         monkeypatch):
-    cache = tmp_path / "cache"
-    monkeypatch.setenv("XDG_CACHE_HOME", str(cache))
+    # probed in a cache of its own: a plan claims the dump name for
+    # this (live) process, which would keep the children from dumping
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "probe"))
     if cds.plan(_find_spark_home()) is None:
         pytest.skip("CDS does not apply here (Spark conf or class path)")
+    cache = tmp_path / "cache"
+    monkeypatch.setenv("XDG_CACHE_HOME", str(cache))
     env = {**os.environ,
            "PYTHONPATH": REPO,
            "SPARK_GRAFT_CPUS": "2",
@@ -69,6 +73,7 @@ def test_second_launch_maps_the_archive_the_first_wrote(tmp_path,
 
     root = cache / "threat_detection_nosql_spark" / "cds"
     assert "mode wrote 45" in launch()
+    # the dump replaced the empty file its launch claimed the name with
     dumps = list(root.glob("*.jsa"))
     assert len(dumps) == 1 and dumps[0].name.count(".") == 2
     # -Xshare:on makes the JVM refuse to start unless the archive maps
@@ -136,3 +141,33 @@ def test_one_dump_is_adopted_and_stale_keys_removed(tmp_path):
                                                cds._MAGIC + b"second")
     assert cds.adopt(str(root), "key") == archive
     assert cds.adopt(str(root), "other") is None
+
+
+def test_a_live_dump_claim_turns_other_launches_off(tmp_path, monkeypatch):
+    """The first launch with no archive claims the dump name with an
+    empty file; while its process lives, no other launch dumps a second
+    archive (each dump adds seconds to its JVM's exit)."""
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    for var in ("SPARK_DIST_CLASSPATH", "HADOOP_CONF_DIR", "YARN_CONF_DIR"):
+        monkeypatch.delenv(var, raising=False)
+    home = _spark_home(tmp_path, [])
+    root = tmp_path / "cache" / "threat_detection_nosql_spark" / "cds"
+
+    first = cds.plan(home)
+    assert "-XX:ArchiveClassesAtExit=" in first.java_options
+    claims = list(root.glob("*.jsa"))
+    assert [p.name.split(".")[1] for p in claims] == [str(os.getpid())]
+    assert claims[0].read_bytes() == b""
+    # this process is alive and holds the claim: no second dump
+    assert cds.plan(home) is None
+    # a claim whose process died without dumping does not block ...
+    key = claims[0].name.split(".")[0]
+    claims[0].rename(root / f"{key}.{_dead_pid()}.jsa")
+    assert "-XX:ArchiveClassesAtExit=" in cds.plan(home).java_options
+    # ... and a finished dump of a dead process is adopted instead
+    for p in root.glob(f"{key}.*.jsa"):
+        p.unlink()
+    (root / f"{key}.{_dead_pid()}.jsa").write_bytes(cds._MAGIC)
+    assert "-XX:SharedArchiveFile=" in cds.plan(home).java_options
+    assert [p.name for p in root.glob("*.jsa")] == [f"{key}.jsa"]

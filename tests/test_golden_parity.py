@@ -83,13 +83,16 @@ def test_contamination_detectors_match_reference_fraction(
     reference's contamination fraction (10%)."""
     fix, scaled = fixture
     n = fix.count()
-    for det, flag, ref_model in (
-            (lambda df: U.iforest_detector(df, n_trees=100),
+    # Mahalanobis reads the plain feature columns, the others the
+    # scaled vector
+    for det, frame, flag, ref_model in (
+            (lambda df: U.iforest_detector(df, n_trees=100), scaled,
              "iforest_anomaly", "Isolation Forest"),
-            (U.mahalanobis_detector, "maha_anomaly", "One-Class SVM"),
-            (U.rff_ocsvm_detector, "ocsvm_anomaly", "One-Class SVM")):
+            (U.mahalanobis_detector, fix, "maha_anomaly", "One-Class SVM"),
+            (U.rff_ocsvm_detector, scaled, "ocsvm_anomaly",
+             "One-Class SVM")):
         want = round(_frac(golden, ref_model) * n)
-        got = det(scaled).filter(f"{flag} = 1").count()
+        got = det(frame).filter(f"{flag} = 1").count()
         assert got == want, (ref_model, got, want)
 
 

@@ -4,6 +4,7 @@ band on the 20-anomaly/200-row fixture)."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -29,6 +30,12 @@ def fixture(spark):
     labels = {r.user: r.is_anomaly
               for r in fix.select("user", "is_anomaly").collect()}
     return scaled, labels
+
+
+@pytest.fixture(scope="module")
+def planted(spark):
+    """The fixture's plain feature columns, as Mahalanobis reads them."""
+    return synthetic_anomaly_fixture(spark).cache()
 
 
 def _tp(df, flag, labels):
@@ -58,10 +65,82 @@ def test_rff_ocsvm_detector_quality(spark, fixture):
     assert tp >= 14
 
 
-def test_mahalanobis_detector_quality(spark, fixture):
-    scaled, labels = fixture
-    n, tp = _tp(U.mahalanobis_detector(scaled), "maha_anomaly", labels)
+def test_mahalanobis_detector_quality(spark, fixture, planted):
+    _, labels = fixture
+    n, tp = _tp(U.mahalanobis_detector(planted), "maha_anomaly", labels)
     assert n == 20 and tp >= 14
+
+
+def _maha_reference(x: np.ndarray, reg: float = 1e-6,
+                    contamination: float = U.CONTAMINATION):
+    """The detector's definition in numpy: z-score each column with the
+    unbiased std (a zero-variance column scales to 0), add reg·I to the
+    1/n covariance of z, take the quadratic form, then flag above the
+    exact (1 - contamination) percentile and min-max the score."""
+    std = x.std(axis=0, ddof=1)
+    z = np.where(std > 0, (x - x.mean(axis=0)) / np.where(std > 0, std, 1),
+                 0.0)
+    zc = z - z.mean(axis=0)
+    inv = np.linalg.inv(zc.T @ zc / len(z) + reg * np.eye(z.shape[1]))
+    q = np.einsum("ij,jk,ik->i", zc, inv, zc)
+    flags = (q > np.percentile(q, 100 * (1 - contamination))).astype(int)
+    span = q.max() - q.min()
+    return (q - q.min()) / span if span > 0 else 0 * q, flags
+
+
+@pytest.mark.parametrize("source", ["planted", "sf0.001"])
+def test_mahalanobis_matches_numpy_reference(spark, planted, source):
+    from tests.conftest import SF_SMALL
+    from threat_detection_nosql_spark.ml.features import (
+        FEATURE_COLS, user_feature_matrix)
+
+    if source == "planted":
+        frame, cols = planted, [f"f{i}" for i in range(8)]
+    else:
+        frame, cols = user_feature_matrix(spark, SF_SMALL), FEATURE_COLS
+    pdf = frame.select("user", *cols).toPandas().sort_values("user")
+    score, flags = _maha_reference(pdf[cols].to_numpy(dtype=float))
+    got = U.mahalanobis_detector(frame).toPandas().sort_values("user")
+    assert got["user"].tolist() == pdf["user"].tolist()
+    np.testing.assert_allclose(got["maha_score"], score, rtol=0, atol=1e-9)
+    assert got["maha_anomaly"].tolist() == flags.tolist()
+
+
+def test_mahalanobis_build_runs_one_aggregate(spark):
+    """Building the query runs one action, the moments aggregate, which
+    also fills the feature matrix's cache: as many jobs as materializing
+    the matrix alone, so no scaler fit and no second pass. Adaptive
+    execution is off while jobs are counted, since it submits each
+    shuffle stage as a job of its own."""
+    from tests.conftest import SF_SMALL
+    from threat_detection_nosql_spark.queries import ml_queries as MQ
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(group, build):
+        MQ._memo.clear()
+        sc.setJobGroup(group, group)
+        try:
+            out = build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(tracker.getJobIdsForGroup(group))
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        MQ.mahalanobis_anomalies(spark, SF_SMALL).collect()    # warm-up
+        _, matrix = jobs("maha-matrix",
+                         lambda: MQ._features(spark, SF_SMALL).count())
+        out, build = jobs("maha-build",
+                          lambda: MQ.mahalanobis_anomalies(spark, SF_SMALL))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        MQ._memo.clear()
+    assert build == matrix >= 1
+    assert out.count() > 0
 
 
 def test_pca_detector_flags_contamination(spark, fixture):
@@ -183,24 +262,32 @@ def test_detector_memo_evicts_dead_application_keys(spark):
 
 def test_ensemble_shares_one_scaled_frame(spark, monkeypatch):
     """All seven detectors and the ensemble consume the one memoized
-    scaled frame of (application, sf_dir); a repeat ensemble call fits
-    nothing and caches nothing new."""
+    feature matrix of (application, sf_dir): Mahalanobis reads it as
+    is, the others through the one scaled frame built from it; a repeat
+    ensemble call fits nothing and caches nothing new."""
     from tests.conftest import SF_SMALL
     from threat_detection_nosql_spark.queries import ml_queries as MQ
 
     seen = []
 
+    def features_of(frame):
+        # the scaled frame is the features frame plus vector columns
+        key = (spark.sparkContext.applicationId, SF_SMALL, "features")
+        assert frame is MQ._memo[key] or frame is MQ._memo[
+            key[:2] + ("scaled",)]
+        return MQ._memo[key]
+
     def recording(fn):
-        def detector(scaled):
-            seen.append(scaled)
-            return fn(scaled)
+        def detector(frame):
+            seen.append(features_of(frame))
+            return fn(frame)
         return detector
 
     monkeypatch.setattr(MQ, "_DETECTORS", {
         name: recording(fn) for name, fn in MQ._DETECTORS.items()})
     ensemble = U.ensemble_detector
     monkeypatch.setattr(U, "ensemble_detector", lambda scaled, **kw: (
-        seen.append(scaled), ensemble(scaled, **kw))[1])
+        seen.append(features_of(scaled)), ensemble(scaled, **kw))[1])
     MQ._memo.clear()
     MQ.ensemble_anomalies(spark, SF_SMALL).collect()
     assert len(seen) == len(MQ._DETECTORS) + 1 == 8

@@ -10,8 +10,10 @@ The archive lives under ``$XDG_CACHE_HOME/threat_detection_nosql_spark/
 cds/`` (``~/.cache`` when the variable is unset), named by a key over
 the JDK and the class-path jars, so a JDK or Spark upgrade starts a new
 archive. Each dump goes to a name holding the launching process's pid,
-and a later launch adopts a finished dump by ``os.replace``, so two
-programs that dump at once never write the same file. The JVM checks
+claimed with an empty file when the JVM launches, and a later launch
+adopts a finished dump by ``os.replace``. While a live process holds a
+claim and no archive is finished, other launches run without CDS
+rather than dump a second archive. The JVM checks
 the archive against its JDK and class path and, under the default
 ``-Xshare:auto``, loads classes the usual way on any mismatch, so a
 stale archive costs speed, never correctness. A dump counts as
@@ -116,6 +118,17 @@ def _alive(pid: int) -> bool:
     return True
 
 
+def _dumps(root: str, key: str) -> list[tuple[str, int]]:
+    """(path, pid) of every ``<key>.<pid>.jsa`` in ``root``, in name
+    order."""
+    out = []
+    for name in sorted(os.listdir(root)):
+        stem, _, pid = name.removesuffix(".jsa").partition(".")
+        if stem == key and pid.isdigit() and name.endswith(".jsa"):
+            out.append((os.path.join(root, name), int(pid)))
+    return out
+
+
 def adopt(root: str, key: str) -> str | None:
     """The path of the finished archive for ``key`` in ``root``, or None.
 
@@ -125,12 +138,9 @@ def adopt(root: str, key: str) -> str | None:
     """
     archive = os.path.join(root, f"{key}.jsa")
     adopted = False
-    for name in sorted(os.listdir(root)):
-        stem, _, pid = name.removesuffix(".jsa").partition(".")
-        if (stem != key or not pid.isdigit() or not name.endswith(".jsa")
-                or _alive(int(pid))):
+    for path, pid in _dumps(root, key):
+        if _alive(pid):
             continue
-        path = os.path.join(root, name)
         with contextlib.suppress(OSError):
             if _finished(path) and not _finished(archive):
                 os.replace(path, archive)
@@ -146,10 +156,28 @@ def adopt(root: str, key: str) -> str | None:
     return archive if _finished(archive) else None
 
 
+def _claim(root: str, key: str) -> str | None:
+    """Claim this process's dump name ``<key>.<pid>.jsa`` with an empty
+    file, or None when a live process already holds a claim for
+    ``key`` (its JVM will dump the archive at exit, so a second dump
+    would only cost another slow exit). HotSpot removes and recreates
+    the claimed file when it dumps."""
+    if any(_alive(pid) for _, pid in _dumps(root, key)):
+        return None
+    dump = os.path.join(root, f"{key}.{os.getpid()}.jsa")
+    try:
+        os.close(os.open(dump, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+    except FileExistsError:
+        return None
+    return dump
+
+
 def plan(spark_home: str) -> Launch | None:
     """The CDS launch for a driver JVM of ``spark_home``, or None when
     CDS does not apply: a class path the archive cannot cover, a conf
-    dir with real configuration, or a cache that cannot be written."""
+    dir with real configuration, a cache that cannot be written, or no
+    finished archive while another live launch holds the dump claim.
+    A launch that will dump claims the dump name (``_claim``)."""
     if any(os.environ.get(v) for v in _CLASSPATH_ENV):
         return None
     java_home = _java_home()
@@ -167,13 +195,15 @@ def plan(spark_home: str) -> Launch | None:
             return None
         key = archive_key(java_home, jars)
         archive = adopt(root, key)
+        dump = None if archive is not None else _claim(root, key)
     except OSError:
         return None
     if archive is not None:
         flag = f"-XX:SharedArchiveFile={archive}"
-    else:
-        dump = os.path.join(root, f"{key}.{os.getpid()}.jsa")
+    elif dump is not None:
         flag = f"-XX:ArchiveClassesAtExit={dump}"
+    else:
+        return None
     # a dump logs ~600 warnings (classes it cannot archive) to stdout,
     # which a program's own output shares; -Xlog:cds in
     # spark.driver.extraJavaOptions turns the log back on

@@ -23,19 +23,25 @@ FEATURE_COLS = [
 ]
 
 
+def feature_columns(df: DataFrame,
+                    exclude: tuple[str, ...] = ("is_anomaly",)
+                    ) -> list[str]:
+    """The known feature schema; else the P5 dtype rule itself
+    (`Comparaison_ML.py:125`: select numeric dtypes, drop the label)."""
+    from pyspark.sql import types as T
+    return ([c for c in FEATURE_COLS if c in df.columns]
+            or [f.name for f in df.schema.fields
+                if isinstance(f.dataType, T.NumericType)
+                and f.name not in exclude])
+
+
 def assemble_features(df: DataFrame, cols: list[str] | None = None,
                       out_col: str = "features",
                       exclude: tuple[str, ...] = ("is_anomaly",)
                       ) -> DataFrame:
-    """Explicit cols win; else the known feature schema; else the P5
-    dtype rule itself (`Comparaison_ML.py:125`: select numeric dtypes,
-    drop the label)."""
+    """Explicit cols win; else ``feature_columns``."""
     from pyspark.ml.feature import VectorAssembler
-    from pyspark.sql import types as T
-    cols = (cols or [c for c in FEATURE_COLS if c in df.columns]
-            or [f.name for f in df.schema.fields
-                if isinstance(f.dataType, T.NumericType)
-                and f.name not in exclude])
+    cols = cols or feature_columns(df, exclude)
     # VectorAssembler casts a non-double input under an alias that holds
     # its random uid, and the alias lands in the generated code. It is
     # given double copies instead, so every build compiles the same
@@ -66,21 +72,20 @@ def scale_features(df: DataFrame, in_col: str = "features",
     return model.transform(df)
 
 
-def scaled_user_features(spark: SparkSession, sf_dir: str,
-                         pins: list[DataFrame] | None = None) -> DataFrame:
-    """End-to-end: events → per-user feature matrix → assembled +
-    scaled vector column. The DataFrame every detector consumes.
-
-    The assembled matrix is cached before the scaler fit, so the fit's
-    job fills the cache and the detectors' jobs read it: the feature
-    build runs once, not once for the fit and again for the detector.
-    ``pins``, when given, receives that cached frame, so a caller that
-    drops the result can unpersist it."""
+def user_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The per-user feature matrix (queries/threat.user_features) with
+    the ``FEATURE_COLS`` nulls filled with 0: the plain numeric frame
+    every detector's input comes from."""
     from threat_detection_nosql_spark.queries.threat import user_features
-    assembled = assemble_features(user_features(spark, sf_dir)).cache()
-    if pins is not None:
-        pins.append(assembled)
-    return scale_features(assembled)
+    return user_features(spark, sf_dir).na.fill(0.0, subset=FEATURE_COLS)
+
+
+def scaled_user_features(features: DataFrame) -> DataFrame:
+    """``user_feature_matrix``'s frame assembled + scaled to a vector
+    column: the DataFrame the vector detectors consume. The scaler fit
+    and the detectors read ``features`` as given, so a caller that
+    caches it builds the feature matrix once."""
+    return scale_features(assemble_features(features))
 
 
 def synthetic_anomaly_fixture(spark: SparkSession, n: int = 200,

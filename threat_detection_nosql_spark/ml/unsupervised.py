@@ -10,9 +10,9 @@ Reference stack: sklearn/TF on a driver-RAM matrix
 - Nonlinear autoencoder (M6 proper): numpy MLP (d→6→4→3→4→6→d, Adam,
   early stopping) fit on a bounded driver sample, broadcast weights,
   Arrow-batched distributed MSE scoring.
-- Mahalanobis distance (M3 distribution-shaped baseline): covariance
-  from a single distributed pass, inverse on the driver (d×d),
-  broadcast quadratic form.
+- Mahalanobis distance (M3 distribution-shaped baseline): raw moments
+  from a single distributed aggregate, inverse on the driver (d×d),
+  quadratic form as one arithmetic column.
 - RFF one-class SVM (M3 proper): Schölkopf's ν-SVM made linear by
   random Fourier features — margin-shaped like the reference's RBF
   OneClassSVM, subgradient fit on a bounded driver sample, KKT-exact ρ,
@@ -379,49 +379,69 @@ def rff_ocsvm_detector(scaled: DataFrame, nu: float = CONTAMINATION,
 # ---------------------------------------------------------------------------
 
 
-def mahalanobis_detector(scaled: DataFrame,
+def _sql_double(v: float) -> str:
+    """A double literal for SQL text: ``repr`` round-trips the value
+    exactly, and the ``D`` suffix keeps it a double."""
+    return f"{float(v)!r}D"
+
+
+def mahalanobis_detector(features: DataFrame,
                          contamination: float = CONTAMINATION,
                          key: str = "user",
                          reg: float = 1e-6) -> DataFrame:
     """OCSVM substitute (documented deviation, SURVEY.md M3): squared
-    Mahalanobis distance to the fitted Gaussian. Covariance via one
-    distributed pass (first and second moments in one aggregate; the
-    dimension d comes from the vector column's ``ml_attr`` metadata),
-    d×d inverse on the driver, broadcast quadratic form evaluated as
-    expressions."""
-    from pyspark.ml.functions import vector_to_array
+    Mahalanobis distance to the fitted Gaussian, read from the plain
+    numeric feature columns ``ml.features.feature_columns`` picks.
 
-    d = scaled.schema["scaled"].metadata["ml_attr"]["num_attrs"]
-    x = vector_to_array(F.col("scaled"))
-    xs = [F.element_at(x, i + 1) for i in range(d)]
-    # μ = E[x] and covariance E[xxᵀ] − μμᵀ from one aggregate
-    # (RowMatrix-free)
-    sums = scaled.select(*[
-        F.sum(xs[i]).alias(f"m_{i}") for i in range(d)
-    ], *[
-        F.sum(xs[i] * xs[j]).alias(f"s_{i}_{j}")
-        for i in range(d) for j in range(i, d)
-    ], F.count("*").alias("n")).first()
-    n = sums["n"]
-    mu = np.array([sums[f"m_{i}"] / n for i in range(d)])
-    cov = np.zeros((d, d))
-    for i in range(d):
-        for j in range(i, d):
-            c = sums[f"s_{i}_{j}"] / n - mu[i] * mu[j]
-            cov[i, j] = cov[j, i] = c
-    inv = np.linalg.inv(cov + reg * np.eye(d))
-    # quadratic form (x−μ)ᵀ Σ⁻¹ (x−μ) as nested expressions
-    diff = F.zip_with(x, F.array(*[F.lit(float(m)) for m in mu]),
-                      lambda a, b: a - b)
-    rows_m = [F.aggregate(
-        F.zip_with(diff, F.array(*[F.lit(float(inv[i, j]))
-                                   for j in range(d)]),
-                   lambda a, b: a * b),
-        F.lit(0.0), lambda a, b: a + b) for i in range(d)]
-    quad = F.aggregate(F.zip_with(diff, F.array(*rows_m),
-                                  lambda a, b: a * b),
-                       F.lit(0.0), lambda a, b: a + b)
-    out = scaled.withColumn("maha_score", quad).select(key, "maha_score")
+    The distance is defined on z-scored features (the reference's
+    StandardScaler, `Comparaison_ML.py:127-128`), but it needs no
+    scaled copy of them. Mahalanobis distance does not change under a
+    per-feature affine map: with z = D⁻¹(x − μ), where D holds the
+    unbiased standard deviations, Σ_z = D⁻¹ S D⁻¹ (S the 1/n
+    covariance of x) and (z − μ_z)ᵀ Σ_z⁻¹ (z − μ_z) = dᵀ D⁻¹ Σ_z⁻¹
+    D⁻¹ d with d = x − μ. The scaling matters for two things only, and
+    both are kept: the ridge ``reg·I`` is added to Σ_z, in z-space, and
+    a zero-variance column scales to 0 (1/0 is taken as 0, as MLlib's
+    StandardScaler does). So one aggregate row gives n, the d sums and
+    the d(d+1)/2 cross sums; the driver inverts the d×d matrix and
+    forms M = D⁻¹(Σ_z + reg·I)⁻¹D⁻¹; the score dᵀ M d is one
+    arithmetic column. An empty frame gives zero rows and no further
+    job."""
+    from threat_detection_nosql_spark.ml.features import feature_columns
+
+    cols = feature_columns(features, (key, "is_anomaly"))
+    d = len(cols)
+    xs = [f"double(`{c}`)" for c in cols]
+    pairs = [(i, j) for i in range(d) for j in range(i, d)]
+    # one row: [n, Σx_i, Σx_i·x_j (i ≤ j)]
+    row = features.select(F.expr("array(" + ", ".join(
+        ["double(count(1))"] + [f"sum({x})" for x in xs]
+        + [f"sum({xs[i]} * {xs[j]})" for i, j in pairs]) + ")")).first()[0]
+    n = int(row[0])
+    if n == 0:
+        return features.select(
+            key, F.lit(None).cast("double").alias("maha_score"),
+            F.lit(None).cast("int").alias("maha_anomaly")).limit(0)
+    mu = np.array(row[1:1 + d]) / n
+    cov = np.zeros((d, d))                      # S, the 1/n covariance
+    for (i, j), s in zip(pairs, row[1 + d:]):
+        cov[i, j] = cov[j, i] = s / n - mu[i] * mu[j]
+    # unbiased std; one row has none (0, as MLlib's summarizer gives)
+    std = np.sqrt(np.maximum(np.diag(cov), 0.0) * n / max(n - 1, 1))
+    live = std > 0
+    inv_std = np.where(live, 1.0 / np.where(live, std, 1.0), 0.0)
+    cov_z = inv_std[:, None] * cov * inv_std[None, :]
+    m = (inv_std[:, None] * np.linalg.inv(cov_z + reg * np.eye(d))
+         * inv_std[None, :])
+    # Σ_i d_i·(Σ_j M_ij d_j) over the columns with variance; a constant
+    # column's row and column of M are 0
+    idx = np.flatnonzero(live)
+    diff = {i: f"({xs[i]} - {_sql_double(mu[i])})" for i in idx}
+    quad = " + ".join(
+        f"{diff[i]} * (" + " + ".join(
+            f"{_sql_double(m[i, j])} * {diff[j]}" for j in idx) + ")"
+        for i in idx) or "0D"
+    out = features.select(key, F.expr(quad).alias("maha_score"))
     return _threshold_flag(out, "maha_score", "maha_anomaly", contamination)
 
 

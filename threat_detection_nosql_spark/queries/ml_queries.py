@@ -3,7 +3,7 @@ correctness gate is detection quality on the planted-anomaly fixture,
 per BASELINE.md; see tests/test_ml.py).
 
 Detector outputs are memoized per (application, sf_dir) and persisted,
-and so is the one scaled feature frame they all consume: the registry
+and so is the one per-user feature matrix they all read: the registry
 runs the seven individual detector queries and then the ensemble, which
 would otherwise re-fit all seven and the scaler — with the memo the
 ensemble is a 7-way join of cached per-user frames. Outputs are tiny
@@ -20,14 +20,17 @@ from threat_detection_nosql_spark.ml.features import (
     scale_features,
     scaled_user_features,
     synthetic_anomaly_fixture,
+    user_feature_matrix,
 )
 from threat_detection_nosql_spark.ml.supervised import supervised_report
 
+# Each takes the scaled vector frame, except Mahalanobis, which takes
+# the plain feature matrix (see _detector).
 _DETECTORS = {
     "kmeans": lambda scaled: U.kmeans_detector(scaled),
     "iforest": lambda scaled: U.iforest_detector(scaled),
     "pca": lambda scaled: U.pca_reconstruction_detector(scaled),
-    "maha": lambda scaled: U.mahalanobis_detector(scaled),
+    "maha": lambda features: U.mahalanobis_detector(features),
     "dbscan": lambda scaled: U.dbscan_detector(scaled),
     "ae": lambda scaled: U.autoencoder_detector(scaled),
     "ocsvm": lambda scaled: U.rff_ocsvm_detector(scaled),
@@ -39,8 +42,10 @@ _DETECTORS = {
 # the application changes, every cached frame from the dead app is
 # dropped (its cache blocks died with the app's executors anyway, so
 # this is bookkeeping, not an unpersist RPC into a dead context).
-# Names are the detectors' and "scaled", the one scaled feature frame
-# all detectors and the ensemble share.
+# Names are the detectors', "features", the cached per-user feature
+# matrix, and "scaled", its assembled + scaled vector frame, which the
+# six vector detectors and the ensemble share. Mahalanobis reads
+# "features" itself: it needs only the matrix's moments.
 _memo: dict[tuple, DataFrame] = {}
 
 # The frames each memo entry's build cached, by memo key. Timed runs
@@ -85,29 +90,41 @@ def _memoized(spark: SparkSession, sf_dir: str, name: str,
     return _memo[key]
 
 
+def _features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def build(pins: list[DataFrame]) -> DataFrame:
+        features = user_feature_matrix(spark, sf_dir).cache()
+        pins.append(features)
+        return features
+    return _memoized(spark, sf_dir, "features", build)
+
+
 def _scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _memoized(spark, sf_dir, "scaled",
-                     lambda pins: scaled_user_features(spark, sf_dir, pins))
+    # not cached itself: the scaler fit's job fills the features cache
+    # and the detectors' jobs read it, so the matrix is built once
+    return _memoized(spark, sf_dir, "scaled", lambda pins:
+                     scaled_user_features(_features(spark, sf_dir)))
 
 
-def _fit_detector(scaled: DataFrame, name: str) -> DataFrame:
+def _fit_detector(frame: DataFrame, name: str) -> DataFrame:
     try:
-        return _DETECTORS[name](scaled)
+        return _DETECTORS[name](frame)
     except Exception:
         # zero rows fail each fit its own way (a JVM error, numpy on an
         # empty sample, a zero count); emptiness is asked only after a
         # failure, so a fit that works runs no extra job
-        if not scaled.isEmpty():
+        if not frame.isEmpty():
             raise
         from pyspark.sql import functions as F
-        return scaled.select("user", *[
+        return frame.select("user", *[
             F.lit(None).cast(t).alias(c)
             for c, t in _EMPTY_COLUMNS[name].items()])
 
 
 def _detector(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     def build(pins: list[DataFrame]) -> DataFrame:
-        out = _fit_detector(_scaled(spark, sf_dir), name).cache()
+        frame = (_features(spark, sf_dir) if name == "maha"
+                 else _scaled(spark, sf_dir))
+        out = _fit_detector(frame, name).cache()
         pins.append(out)
         return out
     return _memoized(spark, sf_dir, name, build)
