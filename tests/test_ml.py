@@ -106,6 +106,22 @@ def test_mahalanobis_matches_numpy_reference(spark, planted, source):
     assert got["maha_anomaly"].tolist() == flags.tolist()
 
 
+def _build_jobs(spark, group, build, clear=True):
+    """``build()``'s result and the number of Spark jobs it ran."""
+    from threat_detection_nosql_spark.queries import ml_queries as MQ
+
+    sc = spark.sparkContext
+    if clear:
+        MQ._memo.clear()
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_mahalanobis_build_runs_one_aggregate(spark):
     """Building the query runs one action, the moments aggregate, which
     also fills the feature matrix's cache: as many jobs as materializing
@@ -115,27 +131,16 @@ def test_mahalanobis_build_runs_one_aggregate(spark):
     from tests.conftest import SF_SMALL
     from threat_detection_nosql_spark.queries import ml_queries as MQ
 
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def jobs(group, build):
-        MQ._memo.clear()
-        sc.setJobGroup(group, group)
-        try:
-            out = build()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return out, len(tracker.getJobIdsForGroup(group))
-
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         MQ.mahalanobis_anomalies(spark, SF_SMALL).collect()    # warm-up
-        _, matrix = jobs("maha-matrix",
-                         lambda: MQ._features(spark, SF_SMALL).count())
-        out, build = jobs("maha-build",
-                          lambda: MQ.mahalanobis_anomalies(spark, SF_SMALL))
+        _, matrix = _build_jobs(
+            spark, "maha-matrix",
+            lambda: MQ._features(spark, SF_SMALL).count())
+        out, build = _build_jobs(
+            spark, "maha-build",
+            lambda: MQ.mahalanobis_anomalies(spark, SF_SMALL))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
         MQ._memo.clear()
@@ -143,10 +148,75 @@ def test_mahalanobis_build_runs_one_aggregate(spark):
     assert out.count() > 0
 
 
+def test_pca_build_runs_what_mahalanobis_runs(spark):
+    """With the feature matrix cached and memoized, building the PCA
+    query runs as many jobs as building the Mahalanobis query: the
+    moments aggregate and nothing else, so no scaler or PCA fit.
+    Adaptive execution is off while jobs are counted."""
+    from tests.conftest import SF_SMALL
+    from threat_detection_nosql_spark.queries import ml_queries as MQ
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    jobs = {}
+    try:
+        MQ._memo.clear()
+        for name in ("maha", "pca"):
+            MQ._detector(spark, SF_SMALL, name).collect()       # warm-up
+        for name in ("maha", "pca"):
+            # keep only the warm "features" entry
+            for k in [k for k in MQ._memo if k[2] != "features"]:
+                MQ._memo.pop(k)
+            out, jobs[name] = _build_jobs(
+                spark, f"{name}-warm-build",
+                lambda: MQ._detector(spark, SF_SMALL, name), clear=False)
+            assert out.count() > 0
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        MQ._memo.clear()
+    assert jobs["pca"] == jobs["maha"] >= 1
+
+
 def test_pca_detector_flags_contamination(spark, fixture):
     scaled, labels = fixture
     n, tp = _tp(U.pca_reconstruction_detector(scaled), "pca_anomaly", labels)
     assert n == 20 and tp >= 8   # linear AE: weaker but in-band
+
+
+def _pca_reference(x: np.ndarray, k: int = 3,
+                   contamination: float = U.CONTAMINATION):
+    """The detector's definition in numpy: z-score each column with the
+    unbiased std (a zero-variance column scales to 0), take the top-k
+    eigenvectors of the 1/n covariance of z, score each row by its mean
+    squared residual off their span, then flag above the exact
+    (1 - contamination) percentile and min-max the score."""
+    std = x.std(axis=0, ddof=1)
+    z = np.where(std > 0, (x - x.mean(axis=0)) / np.where(std > 0, std, 1),
+                 0.0)
+    v = np.linalg.eigh(z.T @ z / len(z))[1][:, -k:]
+    resid = z - z @ v @ v.T
+    q = (resid ** 2).mean(axis=1)
+    flags = (q > np.percentile(q, 100 * (1 - contamination))).astype(int)
+    span = q.max() - q.min()
+    return (q - q.min()) / span if span > 0 else 0 * q, flags
+
+
+@pytest.mark.parametrize("source", ["planted", "sf0.001"])
+def test_pca_matches_numpy_reference(spark, planted, source):
+    from tests.conftest import SF_SMALL
+    from threat_detection_nosql_spark.ml.features import (
+        FEATURE_COLS, user_feature_matrix)
+
+    if source == "planted":
+        frame, cols = planted, [f"f{i}" for i in range(8)]
+    else:
+        frame, cols = user_feature_matrix(spark, SF_SMALL), FEATURE_COLS
+    pdf = frame.select("user", *cols).toPandas().sort_values("user")
+    score, flags = _pca_reference(pdf[cols].to_numpy(dtype=float))
+    got = U.pca_reconstruction_detector(frame).toPandas().sort_values("user")
+    assert got["user"].tolist() == pdf["user"].tolist()
+    np.testing.assert_allclose(got["pca_score"], score, rtol=0, atol=1e-9)
+    assert got["pca_anomaly"].tolist() == flags.tolist()
 
 
 def test_autoencoder_detector_beats_or_matches_pca(spark, fixture):
@@ -163,15 +233,20 @@ def test_autoencoder_detector_beats_or_matches_pca(spark, fixture):
 
 def test_dbscan_noise_recovers_all_planted(spark, fixture):
     scaled, labels = fixture
-    n, tp = _tp(U.dbscan_noise_detector(scaled, eps=2.0),
+    n, tp = _tp(U.dbscan_detector(scaled, eps=2.0),
                 "dbscan_anomaly", labels)
     assert tp == 20              # planted points are isolated
     assert n <= 60               # reference DBSCAN over-flags (74/100)
 
 
-def test_ensemble_majority_vote(spark, fixture):
+def test_ensemble_majority_vote(spark, fixture, planted):
     scaled, labels = fixture
-    out = U.ensemble_detector(scaled)
+    out = U.ensemble_detector({
+        "kmeans": U.kmeans_detector(scaled),
+        "pca": U.pca_reconstruction_detector(planted),
+        "maha": U.mahalanobis_detector(planted),
+        "iforest": U.iforest_detector(scaled),
+        "dbscan": U.dbscan_detector(scaled)})
     n, tp = _tp(out, "ensemble_anomaly", labels)
     assert tp == 20 and n <= 30
     scores = out.select("ensemble_score").collect()
@@ -261,10 +336,11 @@ def test_detector_memo_evicts_dead_application_keys(spark):
 
 
 def test_ensemble_shares_one_scaled_frame(spark, monkeypatch):
-    """All seven detectors and the ensemble consume the one memoized
-    feature matrix of (application, sf_dir): Mahalanobis reads it as
-    is, the others through the one scaled frame built from it; a repeat
-    ensemble call fits nothing and caches nothing new."""
+    """The five detectors the ensemble votes on consume the one
+    memoized feature matrix of (application, sf_dir): PCA and
+    Mahalanobis read it as is, the others through the one scaled frame
+    built from it; a repeat ensemble call fits nothing and caches
+    nothing new."""
     from tests.conftest import SF_SMALL
     from threat_detection_nosql_spark.queries import ml_queries as MQ
 
@@ -285,17 +361,14 @@ def test_ensemble_shares_one_scaled_frame(spark, monkeypatch):
 
     monkeypatch.setattr(MQ, "_DETECTORS", {
         name: recording(fn) for name, fn in MQ._DETECTORS.items()})
-    ensemble = U.ensemble_detector
-    monkeypatch.setattr(U, "ensemble_detector", lambda scaled, **kw: (
-        seen.append(features_of(scaled)), ensemble(scaled, **kw))[1])
     MQ._memo.clear()
     MQ.ensemble_anomalies(spark, SF_SMALL).collect()
-    assert len(seen) == len(MQ._DETECTORS) + 1 == 8
+    assert len(seen) == 5
     assert all(s is seen[0] for s in seen)
     jsc = spark.sparkContext._jsc
     cached = jsc.getPersistentRDDs().size()
     MQ.ensemble_anomalies(spark, SF_SMALL).collect()
-    assert len(seen) == 9 and seen[-1] is seen[0]
+    assert len(seen) == 5
     assert jsc.getPersistentRDDs().size() == cached
 
 
@@ -316,27 +389,6 @@ def test_hist_gbdt_separates_planted_and_is_deterministic(spark, fixture):
     m2 = hist_gbdt_fit(train, "is_anomaly", n_rounds=10)
     assert [t.splits for t in m1.trees] == [t.splits for t in m2.trees]
     assert [t.leaves for t in m1.trees] == [t.leaves for t in m2.trees]
-
-
-def test_pca_2d_projection_variance_order_and_sign_pin(spark, fixture):
-    """The scatter-plot data analog of the reference's PC1/PC2 CSV
-    columns: PC1 must carry at least as much variance as PC2, and the
-    sign pin must make refits identical."""
-    from pyspark.sql import functions as F
-
-    from threat_detection_nosql_spark.ml.unsupervised import (
-        pca_2d_projection)
-
-    scaled, _labels = fixture
-    p1 = pca_2d_projection(scaled).cache()
-    v = p1.agg(F.variance("pc1").alias("v1"),
-               F.variance("pc2").alias("v2")).first()
-    assert v.v1 >= v.v2 > 0
-    p2 = pca_2d_projection(scaled)
-    a = {r.user: (r.pc1, r.pc2) for r in p1.collect()}
-    b = {r.user: (r.pc1, r.pc2) for r in p2.collect()}
-    assert a == b
-    p1.unpersist()
 
 
 def test_eps_pairs_exact_empty_input(spark, fixture):
@@ -387,8 +439,8 @@ def test_memo_miss_unpersists_what_dropped_entries_cached(spark):
 
 def test_detectors_on_empty_and_single_user_features(spark, tmp_path):
     """On an events table with no rows every detector returns no rows,
-    with the columns it returns on a one-user table; a detector that
-    cannot fit one user still raises."""
+    with the columns it returns on a one-user table, where each
+    detector and the ensemble return one row."""
     import pyarrow.parquet as pq
 
     from tests.conftest import SF_SMALL
@@ -415,13 +467,8 @@ def test_detectors_on_empty_and_single_user_features(spark, tmp_path):
     ens = MQ.ensemble_anomalies(spark, str(dirs[0]))
     assert ens.count() == 0
     assert {"votes", "ensemble_anomaly", "ensemble_score"} <= set(ens.columns)
-    # k=2 clusters and a covariance need two users: those fits still
-    # fail, and the failure is not turned into an empty result
     for name, fn in queries.items():
-        if name in ("kmeans", "pca"):
-            with pytest.raises(Exception):
-                fn(spark, str(dirs[1]))
-            continue
         one = fn(spark, str(dirs[1]))
         assert one.count() == 1
         assert one.dtypes == empty[name].dtypes, name
+    assert MQ.ensemble_anomalies(spark, str(dirs[1])).count() == 1

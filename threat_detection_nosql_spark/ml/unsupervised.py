@@ -5,14 +5,14 @@ Reference stack: sklearn/TF on a driver-RAM matrix
 
 - KMeans-distance (M4): Spark ML KMeans, smaller cluster = anomaly,
   min-centroid-distance score (broadcast centers, JVM expressions).
-- PCA reconstruction error (M6 linear baseline — a linear autoencoder):
-  Spark ML PCA, reconstruction in closed form.
+- PCA reconstruction error (M6 linear baseline — a linear autoencoder)
+  and Mahalanobis distance (M3 distribution-shaped baseline): both
+  from one distributed aggregate of raw moments; the driver forms the
+  d×d z-space covariance (eigenvectors for PCA, the inverse for
+  Mahalanobis) and each score is one quadratic-form column.
 - Nonlinear autoencoder (M6 proper): numpy MLP (d→6→4→3→4→6→d, Adam,
   early stopping) fit on a bounded driver sample, broadcast weights,
   Arrow-batched distributed MSE scoring.
-- Mahalanobis distance (M3 distribution-shaped baseline): raw moments
-  from a single distributed aggregate, inverse on the driver (d×d),
-  quadratic form as one arithmetic column.
 - RFF one-class SVM (M3 proper): Schölkopf's ν-SVM made linear by
   random Fourier features — margin-shaped like the reference's RBF
   OneClassSVM, subgradient fit on a bounded driver sample, KKT-exact ρ,
@@ -22,13 +22,12 @@ Reference stack: sklearn/TF on a driver-RAM matrix
   SAMPLE (iForest subsamples ≤256 rows/tree by design, so the driver
   never holds more than n_trees×256 rows), broadcast trees, scoring
   via Arrow-batched pandas UDF.
-- DBSCAN (M5 proper, round 5): full core/border/noise semantics with
-  connected-component cluster assignment and the reference's two-sided
-  score (noise → nearest-core distance, member → mean intra-cluster
-  distance) — ``dbscan_detector``; the cheap ε-neighbor-count
-  approximation (``dbscan_noise_detector``) is kept as the fast path.
+- DBSCAN (M5): full core/border/noise semantics with connected-component
+  cluster assignment and the reference's two-sided score (noise →
+  nearest-core distance, member → mean intra-cluster distance) —
+  ``dbscan_detector``.
 - Ensemble (M7): majority vote ≥3-of-5 (A14) + weighted mean score
-  (A15) as column arithmetic.
+  (A15) as column arithmetic over the five detectors' outputs.
 
 Every detector returns (user, <score>, is_anomaly int) with scores
 min-max normalized (A17) so the vote/weighting matches the reference's
@@ -76,6 +75,43 @@ def _threshold_flag(df: DataFrame, score_col: str, flag_col: str,
             .drop("_thr", "_mn", "_mx"))
 
 
+def _vectors(scaled: DataFrame, key: str) -> DataFrame:
+    """(key, x): the scaled vectors as double arrays."""
+    from pyspark.ml.functions import vector_to_array
+    return scaled.select(F.col(key), vector_to_array("scaled").alias("x"))
+
+
+def _fit_matrix(scaled: DataFrame, key: str, limit: int) -> np.ndarray:
+    """The first ``limit`` scaled vectors in KEY order, as a driver
+    matrix: the sample each driver-side fit (autoencoder, one-class
+    SVM, isolation forest) trains on. Pinned to key order
+    (TakeOrderedAndProject): an unordered limit().toPandas() varies
+    row order run-to-run, and the seeded fits consume rows
+    positionally — a determinism sweep caught the drift. A prefix of a
+    longer take equals the shorter take."""
+    pdf = _vectors(scaled, key).orderBy(key).limit(limit).toPandas()
+    return np.array(pdf["x"].tolist())
+
+
+def _map_vectors(scaled: DataFrame, key: str, schema: str,
+                 score) -> DataFrame:
+    """Distributed scoring of a driver-fitted model: ``score`` maps one
+    Arrow batch's vectors (a numpy matrix) to the output columns
+    ``schema`` declares, next to the key. mapInPandas (not
+    pandas_udf): Arrow-batched, and immune to
+    `from __future__ import annotations` stringifying the type hints."""
+    import pandas as pd
+
+    def batches(it):
+        for batch in it:
+            yield pd.DataFrame({key: batch[key],
+                                **score(np.array(batch["x"].tolist()))})
+
+    key_type = dict(scaled.dtypes)[key]
+    return _vectors(scaled, key).mapInPandas(
+        batches, schema=f"{key} {key_type}, {schema}")
+
+
 # ---------------------------------------------------------------------------
 # M4: KMeans distance detector
 # ---------------------------------------------------------------------------
@@ -85,6 +121,7 @@ def kmeans_detector(scaled: DataFrame, k: int = 2, seed: int = 42,
                     key: str = "user") -> DataFrame:
     """`Comparaison_ML.py:174-197`: k=2 KMeans; anomaly = smaller
     cluster (A13); score = distance to own centroid, min-max normalized."""
+    from py4j.protocol import Py4JJavaError
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import vector_to_array
 
@@ -99,7 +136,16 @@ def kmeans_detector(scaled: DataFrame, k: int = 2, seed: int = 42,
     # the bounded per-user feature table (|users| rows — production
     # would subsample like the other driver-side fits); scoring below
     # stays distributed.
-    model = km.fit(scaled.repartition(1).sortWithinPartitions(key))
+    try:
+        model = km.fit(scaled.repartition(1).sortWithinPartitions(key))
+    except Py4JJavaError:
+        # fewer rows than clusters (none, or one user) cannot be fit;
+        # every row then sits on its own centroid. Asked only after a
+        # failure, so a fit that works runs no extra job
+        if scaled.limit(k).count() >= k:
+            raise
+        return scaled.select(key, F.lit(0.0).alias("kmeans_score"),
+                             F.lit(0).alias("kmeans_anomaly"))
     pred = model.transform(scaled)
     centers = [c.tolist() for c in model.clusterCenters()]
     centers_df = F.broadcast(scaled.sparkSession.createDataFrame(
@@ -123,40 +169,127 @@ def kmeans_detector(scaled: DataFrame, k: int = 2, seed: int = 42,
 
 
 # ---------------------------------------------------------------------------
-# M6 substitute: PCA reconstruction error (linear autoencoder)
+# M6 and M3 substitutes: PCA reconstruction error (a linear autoencoder)
+# and Mahalanobis distance, both from one aggregate of raw moments
 # ---------------------------------------------------------------------------
 
 
-def pca_reconstruction_detector(scaled: DataFrame, k: int = 3,
+def _sql_double(v: float) -> str:
+    """A double literal for SQL text: ``repr`` round-trips the value
+    exactly, and the ``D`` suffix keeps it a double."""
+    return f"{float(v)!r}D"
+
+
+def _moments(features: DataFrame, cols: list[str]):
+    """n, μ, Σ_z and D⁻¹ of ``cols`` from one aggregate row: n, the d
+    sums and the d(d+1)/2 cross sums. D holds the unbiased standard
+    deviations (MLlib's StandardScaler), S is the 1/n covariance and
+    Σ_z = D⁻¹SD⁻¹ the covariance of the z-scored columns; a
+    zero-variance column has 1/0 taken as 0, so it scales to 0, as the
+    scaler does. An empty frame gives n = 0 and Nones, with no further
+    job."""
+    xs = [f"double(`{c}`)" for c in cols]
+    d = len(cols)
+    pairs = [(i, j) for i in range(d) for j in range(i, d)]
+    # one row: [n, Σx_i, Σx_i·x_j (i ≤ j)]
+    row = features.select(F.expr("array(" + ", ".join(
+        ["double(count(1))"] + [f"sum({x})" for x in xs]
+        + [f"sum({xs[i]} * {xs[j]})" for i, j in pairs]) + ")")).first()[0]
+    n = int(row[0])
+    if n == 0:
+        return n, None, None, None
+    mu = np.array(row[1:1 + d]) / n
+    cov = np.zeros((d, d))                      # S, the 1/n covariance
+    for (i, j), s in zip(pairs, row[1 + d:]):
+        cov[i, j] = cov[j, i] = s / n - mu[i] * mu[j]
+    # unbiased std; one row has none (0, as MLlib's summarizer gives)
+    std = np.sqrt(np.maximum(np.diag(cov), 0.0) * n / max(n - 1, 1))
+    live = std > 0
+    inv_std = np.where(live, 1.0 / np.where(live, std, 1.0), 0.0)
+    return n, mu, inv_std[:, None] * cov * inv_std[None, :], inv_std
+
+
+def _quadratic_score(cols: list[str], mu: np.ndarray, m: np.ndarray,
+                     inv_std: np.ndarray) -> Column:
+    """dᵀMd with d = x − μ, as one SQL expression
+    Σᵢ dᵢ·(Σⱼ Mᵢⱼ·dⱼ) over the columns with variance: a constant
+    column's row and column of M are 0."""
+    idx = np.flatnonzero(inv_std)
+    diff = {i: f"(double(`{cols[i]}`) - {_sql_double(mu[i])})"
+            for i in idx}
+    return F.expr(" + ".join(
+        f"{diff[i]} * (" + " + ".join(
+            f"{_sql_double(m[i, j])} * {diff[j]}" for j in idx) + ")"
+        for i in idx) or "0D")
+
+
+def _no_rows(features: DataFrame, key: str, name: str) -> DataFrame:
+    """A linear detector's result on an empty frame: its columns, no
+    rows."""
+    return features.select(
+        key, F.lit(None).cast("double").alias(f"{name}_score"),
+        F.lit(None).cast("int").alias(f"{name}_anomaly")).limit(0)
+
+
+def pca_reconstruction_detector(features: DataFrame, k: int = 3,
                                 contamination: float = CONTAMINATION,
                                 key: str = "user") -> DataFrame:
-    """Autoencoder substitute (`Comparaison_ML.py:253-289`): project to
-    k principal components and back; score = per-row reconstruction MSE;
-    flag above the (1−contamination) percentile (A16). On z-scored
-    input, PCA reconstruction is x̂ = V Vᵀ x — computed as one matrix
-    expression via broadcast V (d×k doubles)."""
-    from pyspark.ml.feature import PCA
-    from pyspark.ml.functions import vector_to_array
+    """Autoencoder substitute (`Comparaison_ML.py:253-289`): project the
+    z-scored features onto their top k principal components and back;
+    score = per-row reconstruction MSE; flag above the
+    (1−contamination) percentile (A16).
 
-    pca = PCA(k=k, inputCol="scaled", outputCol="pc")
-    model = pca.fit(scaled)
-    v = np.array(model.pc.toArray())          # d×k
-    proj = v @ v.T                            # d×d reconstruction map
-    d = proj.shape[0]
-    x = vector_to_array(F.col("scaled"))
-    recon = F.array(*[
-        F.aggregate(
-            F.zip_with(x, F.array(*[F.lit(float(proj[i, j]))
-                                    for j in range(d)]),
-                       lambda xv, pv: xv * pv),
-            F.lit(0.0), lambda a, b: a + b)
-        for i in range(d)
-    ])
-    mse = (F.aggregate(F.zip_with(x, recon, lambda a, b: (a - b) * (a - b)),
-                       F.lit(0.0), lambda a, b: a + b) / d)
-    out = scaled.withColumn("pca_mse", mse).select(key, "pca_mse")
-    out = _threshold_flag(out, "pca_mse", "pca_anomaly", contamination)
-    return out.withColumnRenamed("pca_mse", "pca_score")
+    With z = D⁻¹(x − μ) and V the top-k eigenvectors of the 1/n
+    z-covariance Σ_z = D⁻¹SD⁻¹, the reconstruction is ẑ = VVᵀz, so
+    the MSE ‖z − VVᵀz‖²/d is the quadratic form dᵀMd with d = x − μ
+    and M = D⁻¹(I − VVᵀ)D⁻¹/d. One aggregate gives the moments (see
+    :func:`_moments`), ``numpy.linalg.eigh`` gives V on the driver,
+    and the score is one arithmetic column. A zero-variance column
+    scales to 0, so one user scores 0. An empty frame gives zero rows
+    and no further job."""
+    from threat_detection_nosql_spark.ml.features import feature_columns
+
+    cols = feature_columns(features, (key, "is_anomaly"))
+    n, mu, cov_z, inv_std = _moments(features, cols)
+    if n == 0:
+        return _no_rows(features, key, "pca")
+    d = len(cols)
+    v = np.linalg.eigh(cov_z)[1][:, -k:]       # eigh sorts ascending
+    m = (inv_std[:, None] * (np.eye(d) - v @ v.T) * inv_std[None, :]) / d
+    out = features.select(key, _quadratic_score(cols, mu, m, inv_std)
+                          .alias("pca_score"))
+    return _threshold_flag(out, "pca_score", "pca_anomaly", contamination)
+
+
+def mahalanobis_detector(features: DataFrame,
+                         contamination: float = CONTAMINATION,
+                         key: str = "user",
+                         reg: float = 1e-6) -> DataFrame:
+    """OCSVM substitute (documented deviation, SURVEY.md M3): squared
+    Mahalanobis distance to the fitted Gaussian, read from the plain
+    numeric feature columns ``ml.features.feature_columns`` picks.
+
+    The distance is defined on z-scored features (the reference's
+    StandardScaler, `Comparaison_ML.py:127-128`), but it needs no
+    scaled copy of them. Mahalanobis distance does not change under a
+    per-feature affine map: with z = D⁻¹(x − μ), (z − μ_z)ᵀ Σ_z⁻¹
+    (z − μ_z) = dᵀ D⁻¹ Σ_z⁻¹ D⁻¹ d with d = x − μ. The scaling matters
+    for two things only, and both are kept: the ridge ``reg·I`` is
+    added to Σ_z, in z-space, and a zero-variance column scales to 0
+    (see :func:`_moments`). The driver inverts the d×d matrix and forms
+    M = D⁻¹(Σ_z + reg·I)⁻¹D⁻¹; the score dᵀ M d is one arithmetic
+    column. An empty frame gives zero rows and no further job."""
+    from threat_detection_nosql_spark.ml.features import feature_columns
+
+    cols = feature_columns(features, (key, "is_anomaly"))
+    n, mu, cov_z, inv_std = _moments(features, cols)
+    if n == 0:
+        return _no_rows(features, key, "maha")
+    m = (inv_std[:, None] * np.linalg.inv(cov_z + reg * np.eye(len(cols)))
+         * inv_std[None, :])
+    out = features.select(key, _quadratic_score(cols, mu, m, inv_std)
+                          .alias("maha_score"))
+    return _threshold_flag(out, "maha_score", "maha_anomaly", contamination)
 
 
 # ---------------------------------------------------------------------------
@@ -264,33 +397,13 @@ def autoencoder_detector(scaled: DataFrame,
     planted-anomaly recovery (≥ the linear PCA substitute's) rather
     than value equality — tests/test_ml.py.
     """
-    import pandas as pd
-    from pyspark.ml.functions import vector_to_array
-
-    # fit sample pinned to KEY order (TakeOrderedAndProject): an
-    # unordered limit().toPandas() varies row order run-to-run, and
-    # the seeded trainer consumes rows positionally — the round-10
-    # determinism sweep caught the drift
-    pdf = (scaled.select(F.col(key), vector_to_array("scaled").alias("x"))
-           .orderBy(key).limit(max_fit_rows).toPandas())
-    mat = np.array(pdf["x"].tolist())
+    mat = _fit_matrix(scaled, key, max_fit_rows)
     d = mat.shape[1]
     dims = [d, *hidden, *hidden[-2::-1], d]
     params = _ae_train(mat, dims, seed, epochs=epochs)
     bc = scaled.sparkSession.sparkContext.broadcast(params)
-
-    key_type = dict(scaled.dtypes)[key]
-    proj = scaled.select(F.col(key), vector_to_array("scaled").alias("x"))
-
-    def score_batches(it):
-        ps = bc.value
-        for batch in it:
-            x = np.array(batch["x"].tolist())
-            mse = np.mean((_ae_forward(x, ps) - x) ** 2, axis=1)
-            yield pd.DataFrame({key: batch[key], "ae_mse": mse})
-
-    out = proj.mapInPandas(
-        score_batches, schema=f"{key} {key_type}, ae_mse double")
+    out = _map_vectors(scaled, key, "ae_mse double", lambda x: {
+        "ae_mse": np.mean((_ae_forward(x, bc.value) - x) ** 2, axis=1)})
     out = _threshold_flag(out, "ae_mse", "ae_anomaly", contamination)
     return out.withColumnRenamed("ae_mse", "ae_score")
 
@@ -328,15 +441,9 @@ def rff_ocsvm_detector(scaled: DataFrame, nu: float = CONTAMINATION,
     and the exact-ν cut applies to the FIT SAMPLE (the scored stream
     flags wherever f < 0) — the quality gate is a band,
     tests/test_ml.py."""
-    import pandas as pd
-    from pyspark.ml.functions import vector_to_array
-
     from threat_detection_nosql_spark.ml.supervised import _rff_planes
 
-    # key-ordered fit sample — same determinism pin as the autoencoder
-    pdf = (scaled.select(F.col(key), vector_to_array("scaled").alias("x"))
-           .orderBy(key).limit(max_fit_rows).toPandas())
-    mat = np.array(pdf["x"].tolist())
+    mat = _fit_matrix(scaled, key, max_fit_rows)
     n, d = mat.shape
     w_pl, b_pl = _rff_planes(d, n_features, seed, gamma)
     z = np.sqrt(2.0 / n_features) * np.cos(mat @ w_pl + b_pl)
@@ -355,94 +462,17 @@ def rff_ocsvm_detector(scaled: DataFrame, nu: float = CONTAMINATION,
     rho = float(np.quantile(z @ w, nu))  # exact KKT ρ for the final w
 
     bc = scaled.sparkSession.sparkContext.broadcast((w_pl, b_pl, w, rho))
-    key_type = dict(scaled.dtypes)[key]
-    proj = scaled.select(F.col(key), vector_to_array("scaled").alias("x"))
 
-    def score_batches(it):
+    def score(x):
         wp, bp, wv, r = bc.value
-        for batch in it:
-            x = np.array(batch["x"].tolist())
-            zb = np.sqrt(2.0 / wp.shape[1]) * np.cos(x @ wp + bp)
-            dec = zb @ wv - r
-            yield pd.DataFrame({key: batch[key],
-                                "ocsvm_score": -dec,
-                                "ocsvm_anomaly": (dec < 0).astype("int32")})
+        zb = np.sqrt(2.0 / wp.shape[1]) * np.cos(x @ wp + bp)
+        dec = zb @ wv - r
+        return {"ocsvm_score": -dec,
+                "ocsvm_anomaly": (dec < 0).astype("int32")}
 
-    out = proj.mapInPandas(
-        score_batches,
-        schema=f"{key} {key_type}, ocsvm_score double, ocsvm_anomaly int")
+    out = _map_vectors(scaled, key,
+                       "ocsvm_score double, ocsvm_anomaly int", score)
     return _minmax(out, "ocsvm_score")
-
-
-# ---------------------------------------------------------------------------
-# M3 substitute: Mahalanobis distance
-# ---------------------------------------------------------------------------
-
-
-def _sql_double(v: float) -> str:
-    """A double literal for SQL text: ``repr`` round-trips the value
-    exactly, and the ``D`` suffix keeps it a double."""
-    return f"{float(v)!r}D"
-
-
-def mahalanobis_detector(features: DataFrame,
-                         contamination: float = CONTAMINATION,
-                         key: str = "user",
-                         reg: float = 1e-6) -> DataFrame:
-    """OCSVM substitute (documented deviation, SURVEY.md M3): squared
-    Mahalanobis distance to the fitted Gaussian, read from the plain
-    numeric feature columns ``ml.features.feature_columns`` picks.
-
-    The distance is defined on z-scored features (the reference's
-    StandardScaler, `Comparaison_ML.py:127-128`), but it needs no
-    scaled copy of them. Mahalanobis distance does not change under a
-    per-feature affine map: with z = D⁻¹(x − μ), where D holds the
-    unbiased standard deviations, Σ_z = D⁻¹ S D⁻¹ (S the 1/n
-    covariance of x) and (z − μ_z)ᵀ Σ_z⁻¹ (z − μ_z) = dᵀ D⁻¹ Σ_z⁻¹
-    D⁻¹ d with d = x − μ. The scaling matters for two things only, and
-    both are kept: the ridge ``reg·I`` is added to Σ_z, in z-space, and
-    a zero-variance column scales to 0 (1/0 is taken as 0, as MLlib's
-    StandardScaler does). So one aggregate row gives n, the d sums and
-    the d(d+1)/2 cross sums; the driver inverts the d×d matrix and
-    forms M = D⁻¹(Σ_z + reg·I)⁻¹D⁻¹; the score dᵀ M d is one
-    arithmetic column. An empty frame gives zero rows and no further
-    job."""
-    from threat_detection_nosql_spark.ml.features import feature_columns
-
-    cols = feature_columns(features, (key, "is_anomaly"))
-    d = len(cols)
-    xs = [f"double(`{c}`)" for c in cols]
-    pairs = [(i, j) for i in range(d) for j in range(i, d)]
-    # one row: [n, Σx_i, Σx_i·x_j (i ≤ j)]
-    row = features.select(F.expr("array(" + ", ".join(
-        ["double(count(1))"] + [f"sum({x})" for x in xs]
-        + [f"sum({xs[i]} * {xs[j]})" for i, j in pairs]) + ")")).first()[0]
-    n = int(row[0])
-    if n == 0:
-        return features.select(
-            key, F.lit(None).cast("double").alias("maha_score"),
-            F.lit(None).cast("int").alias("maha_anomaly")).limit(0)
-    mu = np.array(row[1:1 + d]) / n
-    cov = np.zeros((d, d))                      # S, the 1/n covariance
-    for (i, j), s in zip(pairs, row[1 + d:]):
-        cov[i, j] = cov[j, i] = s / n - mu[i] * mu[j]
-    # unbiased std; one row has none (0, as MLlib's summarizer gives)
-    std = np.sqrt(np.maximum(np.diag(cov), 0.0) * n / max(n - 1, 1))
-    live = std > 0
-    inv_std = np.where(live, 1.0 / np.where(live, std, 1.0), 0.0)
-    cov_z = inv_std[:, None] * cov * inv_std[None, :]
-    m = (inv_std[:, None] * np.linalg.inv(cov_z + reg * np.eye(d))
-         * inv_std[None, :])
-    # Σ_i d_i·(Σ_j M_ij d_j) over the columns with variance; a constant
-    # column's row and column of M are 0
-    idx = np.flatnonzero(live)
-    diff = {i: f"({xs[i]} - {_sql_double(mu[i])})" for i in idx}
-    quad = " + ".join(
-        f"{diff[i]} * (" + " + ".join(
-            f"{_sql_double(m[i, j])} * {diff[j]}" for j in idx) + ")"
-        for i in idx) or "0D"
-    out = features.select(key, F.expr(quad).alias("maha_score"))
-    return _threshold_flag(out, "maha_score", "maha_anomaly", contamination)
 
 
 # ---------------------------------------------------------------------------
@@ -490,25 +520,15 @@ def _build_iforest(sample: np.ndarray, n_trees: int, max_samples: int,
     return trees, depth_limit
 
 
-def _avg_path_len(n: float) -> float:
-    """c(n): expected path length of unsuccessful BST search."""
-    if n <= 1:
-        return 0.0
-    h = np.log(n - 1) + 0.5772156649
-    return 2.0 * h - 2.0 * (n - 1) / n
-
-
-def _iforest_path(xrow: np.ndarray, nodes) -> float:
-    node = nodes[0]
-    depth = 0
-    i = 0
-    while node[0] >= 0:
-        f, s, li, ri = node
-        i = li if xrow[int(f)] < s else ri
-        node = nodes[i]
-        depth += 1
-    leaf_n = node[1]
-    return depth + _avg_path_len(leaf_n)
+def _avg_path_len(n):
+    """c(n), elementwise: expected path length of an unsuccessful BST
+    search among n points (0 for n ≤ 1)."""
+    n = np.asarray(n, dtype=float)
+    return np.where(
+        n > 1,
+        2.0 * (np.log(np.maximum(n - 1, 1)) + 0.5772156649)
+        - 2.0 * (n - 1) / np.maximum(n, 1),
+        0.0)
 
 
 def _tree_arrays(nodes) -> tuple[np.ndarray, ...]:
@@ -521,8 +541,7 @@ def _tree_arrays(nodes) -> tuple[np.ndarray, ...]:
 def _iforest_paths_batch(x: np.ndarray, trees) -> np.ndarray:
     """Mean path length for a whole batch at once: every row walks each
     tree simultaneously via index arrays (depth ≤ log2(ψ) iterations of
-    O(batch) numpy ops) — replaces the per-row Python loop, ~50× less
-    interpreter overhead in the scoring UDF."""
+    O(batch) numpy ops), not row by row in Python."""
     n = len(x)
     total = np.zeros(n)
     for nodes in trees:
@@ -537,13 +556,8 @@ def _iforest_paths_batch(x: np.ndarray, trees) -> np.ndarray:
             idx[ai] = np.where(go_left, left[cur], right[cur])
             depth[ai] += 1
             active[ai] = feat[idx[ai]] >= 0
-        leaf_sizes = split[idx]  # leaves store |idx| in the split slot
-        c = np.where(
-            leaf_sizes > 1,
-            2.0 * (np.log(np.maximum(leaf_sizes - 1, 1)) + 0.5772156649)
-            - 2.0 * (leaf_sizes - 1) / np.maximum(leaf_sizes, 1),
-            0.0)
-        total += depth + c
+        # leaves store |idx| in the split slot
+        total += depth + _avg_path_len(split[idx])
     return total / len(trees)
 
 
@@ -557,137 +571,21 @@ def iforest_detector(scaled: DataFrame, n_trees: int = 200,
     scoring is distributed via an Arrow-batched pandas UDF over the
     broadcast forest. Score = 2^(−E[path]/c(ψ)) ∈ (0,1), higher =
     more anomalous."""
-    import pandas as pd
-    from pyspark.ml.functions import vector_to_array
-
-    fit_n = n_trees * max_samples
-    # key-ordered fit sample — same determinism pin as the autoencoder
-    pdf = (scaled.select(F.col(key), vector_to_array("scaled").alias("x"))
-           .orderBy(key).limit(fit_n).toPandas())
-    mat = np.array(pdf["x"].tolist())
+    mat = _fit_matrix(scaled, key, n_trees * max_samples)
     rng = np.random.default_rng(seed)
     forests, _ = _build_iforest(mat, n_trees, max_samples, rng)
-    c_norm = _avg_path_len(min(max_samples, len(mat)))
-    sc = scaled.sparkSession.sparkContext
-    b_forest = sc.broadcast(forests)
-
-    key_type = dict(scaled.dtypes)[key]
-    proj = scaled.select(F.col(key), vector_to_array("scaled").alias("x"))
-
-    # mapInPandas (not pandas_udf): Arrow-batched, and immune to
-    # `from __future__ import annotations` stringifying the type hints
-    def score_batches(it):
-        for batch in it:
-            trees = b_forest.value
-            x = np.array(batch["x"].tolist())
-            mean_paths = _iforest_paths_batch(x, trees)
-            scores = 2.0 ** (-mean_paths / c_norm)
-            yield pd.DataFrame({key: batch[key],
-                                "iforest_score": scores})
-
-    out = proj.mapInPandas(
-        score_batches, schema=f"{key} {key_type}, iforest_score double")
+    c_norm = float(_avg_path_len(min(max_samples, len(mat))))
+    b_forest = scaled.sparkSession.sparkContext.broadcast(forests)
+    out = _map_vectors(scaled, key, "iforest_score double", lambda x: {
+        "iforest_score":
+            2.0 ** (-_iforest_paths_batch(x, b_forest.value) / c_norm)})
     return _threshold_flag(out, "iforest_score", "iforest_anomaly",
                            contamination)
 
 
 # ---------------------------------------------------------------------------
-# M5 approx: DBSCAN-noise via LSH neighbor counting
+# M5: DBSCAN
 # ---------------------------------------------------------------------------
-
-
-def dbscan_noise_detector(scaled: DataFrame, eps: float = 0.5,
-                          min_samples: int | None = None,
-                          key: str = "user",
-                          exact: bool | None = None) -> DataFrame:
-    """`Comparaison_ML.py:204-251`: eps=0.5, min_samples = max(5, 1% n);
-    noise points = anomalies. Scores follow the reference's semantics:
-    cluster points score their mean distance to eps-ball members
-    (< eps by construction), noise points score the distance to their
-    NEAREST CORE point (≥ eps by DBSCAN's definition of noise) — so
-    after min-max normalization noise ranks highest, matching
-    `Comparaison_ML.py:213-242`.
-
-    Neighbor pairs via BucketedRandomProjectionLSH approxSimilarityJoin
-    (bucket-collision candidates only — subquadratic); `exact=True`
-    forces a broadcast self-join for small inputs/tests. The
-    noise-to-core distance pass joins the (contamination-sized) noise
-    set against core points with the noise side broadcast — O(|core|)
-    scan, |noise| output rows, no quadratic blowup.
-    """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import vector_to_array
-
-    n = scaled.count()
-    if min_samples is None:
-        min_samples = max(5, int(0.01 * n))
-    if exact is None:
-        # all-pairs is n² candidate rows: 10k ⇒ 10⁸ pairs is the
-        # practical ceiling for the exact path; beyond that the LSH
-        # candidate join is mandatory
-        exact = n <= 10_000
-
-    pts = scaled.select(F.col(key), F.col("scaled"))
-    if exact:
-        a = pts.select(F.col(key).alias("a"),
-                       vector_to_array("scaled").alias("va"))
-        b = pts.select(F.col(key).alias("b"),
-                       vector_to_array("scaled").alias("vb"))
-        dist = F.sqrt(F.aggregate(
-            F.zip_with("va", "vb", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, x: acc + x))
-        pairs = (a.join(F.broadcast(b), F.col("a") != F.col("b"))
-                 .withColumn("d", dist)
-                 .filter(F.col("d") <= eps)
-                 .select("a", "d"))
-    else:
-        lsh = BucketedRandomProjectionLSH(
-            inputCol="scaled", outputCol="hashes",
-            bucketLength=eps * 2, numHashTables=4, seed=42)
-        model = lsh.fit(pts)
-        joined = model.approxSimilarityJoin(pts, pts, eps, distCol="d")
-        pairs = (joined
-                 .select(F.col(f"datasetA.{key}").alias("a"),
-                         F.col(f"datasetB.{key}").alias("b"), "d")
-                 .filter(F.col("a") != F.col("b"))
-                 .select("a", "d"))
-    counts = (pairs.groupBy("a")
-              .agg(F.count("*").alias("n_neighbors"),
-                   F.avg("d").alias("mean_dist")))
-    flagged = (pts
-               .join(counts, F.col(key) == F.col("a"), "left")
-               .select(key, "scaled",
-                       F.coalesce("n_neighbors", F.lit(0))
-                        .alias("n_neighbors"),
-                       F.coalesce("mean_dist", F.lit(0.0)).alias("mean_dist"))
-               .withColumn("dbscan_anomaly",
-                           (F.col("n_neighbors") < min_samples).cast("int")))
-    # noise score = distance to nearest core point (reference
-    # Comparaison_ML.py:213-242). Noise is the small side (~contamination
-    # fraction) → broadcast it against the core set; one scan of core.
-    from pyspark.ml.functions import vector_to_array
-    core = (flagged.filter(F.col("dbscan_anomaly") == 0)
-            .select(vector_to_array("scaled").alias("vc")))
-    noise = (flagged.filter(F.col("dbscan_anomaly") == 1)
-             .select(F.col(key).alias("nk"),
-                     vector_to_array("scaled").alias("vn")))
-    ndist = F.sqrt(F.aggregate(
-        F.zip_with("vn", "vc", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, x: acc + x))
-    core_dist = (core.join(F.broadcast(noise))
-                 .select("nk", ndist.alias("cd"))
-                 .groupBy("nk")
-                 .agg(F.min("cd").alias("core_dist")))
-    out = (flagged
-           .join(core_dist, F.col(key) == F.col("nk"), "left")
-           .select(key, "dbscan_anomaly",
-                   F.when(F.col("dbscan_anomaly") == 1,
-                          # no core points at all → fall back to eps (a
-                          # lower bound on the true noise-core distance)
-                          F.coalesce("core_dist", F.lit(float(eps))))
-                    .otherwise(F.col("mean_dist"))
-                    .alias("dbscan_score")))
-    return _minmax(out, "dbscan_score")
 
 
 def _eps_pairs(scaled: DataFrame, eps: float, key: str,
@@ -697,26 +595,20 @@ def _eps_pairs(scaled: DataFrame, eps: float, key: str,
     collected once (≤10k × dim doubles — sub-MB) and broadcast; a
     mapInPandas kernel computes each Arrow batch's distances to ALL
     points in one BLAS GEMM (‖a‖² + ‖b‖² − 2a·b) and emits only the
-    within-eps pairs.  The previous broadcast nested-loop self-join
-    built up to ~10⁸ pair ROWS through an interpreted zip_with —
-    a cliff just under the threshold; the GEMM does the same 10⁸
-    distance evaluations inside numpy without materializing non-pairs.
-    Scale path: BucketedRandomProjectionLSH bucket-collision candidates
-    only."""
+    within-eps pairs: up to 10⁸ distance evaluations inside numpy,
+    with no row materialized for a non-pair. Scale path:
+    BucketedRandomProjectionLSH bucket-collision candidates only."""
     from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import vector_to_array
 
     pts = scaled.select(F.col(key), F.col("scaled"))
     if exact:
-        import numpy as np
         import pandas as pd
 
         # materialize ONCE: toPandas (broadcast snapshot) and mapInPandas
         # both consume arr — without the checkpoint a nondeterministic
         # upstream would feed them different data (asymmetric pairs) and
         # a deterministic one would be recomputed
-        arr = (pts.select(F.col(key), vector_to_array("scaled").alias("v"))
-               .localCheckpoint())
+        arr = _vectors(scaled, key).localCheckpoint()
         pdf = arr.toPandas()
         key_t = pts.schema[key].dataType.simpleString()
         schema = f"a {key_t}, b {key_t}, d double"
@@ -724,7 +616,7 @@ def _eps_pairs(scaled: DataFrame, eps: float, key: str,
             return (scaled.sparkSession
                     .createDataFrame([], schema=schema))
         ids = pdf[key].to_numpy()
-        mat = np.stack(pdf["v"].to_numpy()).astype("float64")
+        mat = np.stack(pdf["x"].to_numpy()).astype("float64")
         sq = (mat * mat).sum(axis=1)
         bc = scaled.sparkSession.sparkContext.broadcast((ids, mat, sq))
         eps2 = float(eps) * float(eps)
@@ -735,7 +627,7 @@ def _eps_pairs(scaled: DataFrame, eps: float, key: str,
                 if len(chunk) == 0:
                     continue
                 a_ids = chunk[key].to_numpy()
-                a = np.stack(chunk["v"].to_numpy()).astype("float64")
+                a = np.stack(chunk["x"].to_numpy()).astype("float64")
                 d2 = ((a * a).sum(axis=1)[:, None] + b_sq[None, :]
                       - 2.0 * (a @ b_mat.T))
                 np.maximum(d2, 0.0, out=d2)
@@ -777,18 +669,17 @@ def dbscan_detector(scaled: DataFrame, eps: float = 0.5,
 
     sklearn semantics: a point is core iff its eps-ball holds ≥
     ``min_samples`` points INCLUDING itself; border points (non-core
-    within eps of a core) join a cluster and are NOT noise — unlike
-    the neighbor-count approximation (:func:`dbscan_noise_detector`),
-    which flags them. Clusters are connected components of the
-    core-core eps-graph, computed by iterative min-label propagation:
-    each pass is one edge join + group-min, localCheckpoint-pinned
-    (small frame, Lloyd-like bounded driver traffic), converging in
-    O(component diameter) ≤ ``max_iter`` passes. Border points take
-    the smallest core-neighbor label (sklearn's assignment is
-    scan-order-dependent; smallest-label is the deterministic
-    re-expression). The per-cluster mean-distance score is a self-join
-    on the cluster label — Σ|cluster|² work, the same quadratic the
-    reference pays in numpy, bounded per cluster rather than global.
+    within eps of a core) join a cluster and are NOT noise. Clusters
+    are connected components of the core-core eps-graph, computed by
+    iterative min-label propagation: each pass is one edge join +
+    group-min, localCheckpoint-pinned (small frame, Lloyd-like bounded
+    driver traffic), converging in O(component diameter) ≤
+    ``max_iter`` passes. Border points take the smallest core-neighbor
+    label (sklearn's assignment is scan-order-dependent; smallest-label
+    is the deterministic re-expression). The per-cluster mean-distance
+    score is a self-join on the cluster label — Σ|cluster|² work, the
+    same quadratic the reference pays in numpy, bounded per cluster
+    rather than global.
     """
     n = scaled.count()
     if min_samples is None:
@@ -885,31 +776,17 @@ ENSEMBLE_WEIGHTS = {  # `Comparaison_ML.py:306-317`
 }
 
 
-def ensemble_detector(scaled: DataFrame, key: str = "user",
-                      contamination: float = CONTAMINATION,
-                      seed: int = 42,
-                      parts: dict[str, DataFrame] | None = None) -> DataFrame:
-    """Run all 5 detectors and combine: majority vote ≥3/5 (A14) and
-    weighted mean of normalized scores (A15) — all column arithmetic
-    after joining on the key (J7 done relationally, not positionally).
-
-    ``parts`` lets a caller hand in already-computed detector outputs
-    (keys: kmeans, pca, maha, iforest, dbscan) so the ensemble is a
-    5-way join of cached 1-row-per-key frames instead of five re-fits —
-    the query registry uses this to avoid re-running detectors the
-    individual queries just materialized."""
-    parts = parts or {}
-    km = parts.get("kmeans") or kmeans_detector(scaled, seed=seed, key=key)
-    pca = parts.get("pca") or pca_reconstruction_detector(
-        scaled, contamination=contamination, key=key)
-    maha = parts.get("maha") or mahalanobis_detector(
-        scaled, contamination=contamination, key=key)
-    iso = parts.get("iforest") or iforest_detector(
-        scaled, contamination=contamination, seed=seed, key=key)
-    dbs = (parts.get("dbscan")
-           or dbscan_detector(scaled, key=key)).select(
-        key, "dbscan_anomaly", "dbscan_score")
-    out = (km.join(pca, key).join(maha, key).join(iso, key).join(dbs, key))
+def ensemble_detector(parts: dict[str, DataFrame],
+                      key: str = "user") -> DataFrame:
+    """Combine the five detectors' outputs (``parts`` keys: kmeans,
+    pca, maha, iforest, dbscan): majority vote ≥3/5 (A14) and weighted
+    mean of normalized scores (A15) — all column arithmetic after
+    joining on the key (J7 done relationally, not positionally). It
+    fits nothing itself: the query registry hands in the memoized
+    frames the individual detector queries built."""
+    dbs = parts["dbscan"].select(key, "dbscan_anomaly", "dbscan_score")
+    out = (parts["kmeans"].join(parts["pca"], key).join(parts["maha"], key)
+           .join(parts["iforest"], key).join(dbs, key))
     votes = (F.col("kmeans_anomaly") + F.col("pca_anomaly")
              + F.col("maha_anomaly") + F.col("iforest_anomaly")
              + F.col("dbscan_anomaly"))
@@ -919,33 +796,3 @@ def ensemble_detector(scaled: DataFrame, key: str = "user",
             .withColumn("votes", votes)
             .withColumn("ensemble_anomaly", (votes >= 3).cast("int"))
             .withColumn("ensemble_score", F.round(wscore, 6)))
-
-
-def pca_2d_projection(scaled: DataFrame, key: str = "user") -> DataFrame:
-    """The reference's committed per-user (PC1, PC2) plot coordinates
-    (`resultats_non_supervise.csv` columns PC1/PC2, fed to every
-    scatter in `Comparaison_ML.py`'s viz layer — the plot itself is
-    out of scope, its data is not): project the z-scored features onto
-    the top-2 principal components. Spark ML PCA fit (distributed
-    covariance/SVD) + a broadcast d×2 matrix expression per row. Sign
-    convention: each component is flipped so its largest-|loading|
-    coordinate is positive — eigenvector sign is arbitrary and
-    engine-specific, so pinning it makes the output deterministic
-    across refits."""
-    from pyspark.ml.feature import PCA
-    from pyspark.ml.functions import vector_to_array
-
-    pca = PCA(k=2, inputCol="scaled", outputCol="pc")
-    model = pca.fit(scaled)
-    v = np.array(model.pc.toArray())          # d×2
-    for j in range(v.shape[1]):
-        if v[np.abs(v[:, j]).argmax(), j] < 0:
-            v[:, j] = -v[:, j]
-    x = vector_to_array(F.col("scaled"))
-    cols = [F.round(F.aggregate(
-        F.zip_with(x, F.array(*[F.lit(float(v[i, j]))
-                                for i in range(v.shape[0])]),
-                   lambda xv, pv: xv * pv),
-        F.lit(0.0), lambda a, b: a + b), 6).alias(f"pc{j + 1}")
-        for j in range(2)]
-    return scaled.select(key, *cols)

@@ -4,10 +4,10 @@ per BASELINE.md; see tests/test_ml.py).
 
 Detector outputs are memoized per (application, sf_dir) and persisted,
 and so is the one per-user feature matrix they all read: the registry
-runs the seven individual detector queries and then the ensemble, which
-would otherwise re-fit all seven and the scaler — with the memo the
-ensemble is a 7-way join of cached per-user frames. Outputs are tiny
-(one row per user), so the cache cost is negligible.
+runs the individual detector queries and then the ensemble, which would
+otherwise re-fit the five detectors it votes on and the scaler — with
+the memo the ensemble is a 5-way join of cached per-user frames.
+Outputs are tiny (one row per user), so the cache cost is negligible.
 """
 
 from __future__ import annotations
@@ -24,17 +24,23 @@ from threat_detection_nosql_spark.ml.features import (
 )
 from threat_detection_nosql_spark.ml.supervised import supervised_report
 
-# Each takes the scaled vector frame, except Mahalanobis, which takes
-# the plain feature matrix (see _detector).
+# Each takes the scaled vector frame, except those in _MOMENT_DETECTORS,
+# which take the plain feature matrix (see _detector).
 _DETECTORS = {
     "kmeans": lambda scaled: U.kmeans_detector(scaled),
     "iforest": lambda scaled: U.iforest_detector(scaled),
-    "pca": lambda scaled: U.pca_reconstruction_detector(scaled),
+    "pca": lambda features: U.pca_reconstruction_detector(features),
     "maha": lambda features: U.mahalanobis_detector(features),
     "dbscan": lambda scaled: U.dbscan_detector(scaled),
     "ae": lambda scaled: U.autoencoder_detector(scaled),
     "ocsvm": lambda scaled: U.rff_ocsvm_detector(scaled),
 }
+
+# The linear detectors need only the feature matrix's moments.
+_MOMENT_DETECTORS = ("pca", "maha")
+
+# The detectors the ensemble votes on.
+_ENSEMBLE_PARTS = ("kmeans", "iforest", "pca", "maha", "dbscan")
 
 # Memoized per (Spark application, sf_dir, name): keyed by
 # applicationId — unlike id(spark), which a garbage-collected session
@@ -44,8 +50,8 @@ _DETECTORS = {
 # this is bookkeeping, not an unpersist RPC into a dead context).
 # Names are the detectors', "features", the cached per-user feature
 # matrix, and "scaled", its assembled + scaled vector frame, which the
-# six vector detectors and the ensemble share. Mahalanobis reads
-# "features" itself: it needs only the matrix's moments.
+# five vector detectors share. PCA and Mahalanobis read "features"
+# itself.
 _memo: dict[tuple, DataFrame] = {}
 
 # The frames each memo entry's build cached, by memo key. Timed runs
@@ -55,7 +61,7 @@ _memo: dict[tuple, DataFrame] = {}
 _pinned: dict[tuple, list[DataFrame]] = {}
 
 # Each detector's columns besides the key: the result of an empty
-# feature frame, on which every fit fails.
+# feature frame, for the fits that fail on one.
 _EMPTY_COLUMNS = {name: {f"{name}_score": "double", f"{name}_anomaly": "int"}
                   for name in _DETECTORS}
 _EMPTY_COLUMNS["dbscan"] = {"cluster": "bigint", "dbscan_anomaly": "int",
@@ -122,7 +128,7 @@ def _fit_detector(frame: DataFrame, name: str) -> DataFrame:
 
 def _detector(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     def build(pins: list[DataFrame]) -> DataFrame:
-        frame = (_features(spark, sf_dir) if name == "maha"
+        frame = (_features(spark, sf_dir) if name in _MOMENT_DETECTORS
                  else _scaled(spark, sf_dir))
         out = _fit_detector(frame, name).cache()
         pins.append(out)
@@ -166,8 +172,8 @@ def dbscan_noise_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ensemble_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    parts = {name: _detector(spark, sf_dir, name) for name in _DETECTORS}
-    return U.ensemble_detector(_scaled(spark, sf_dir), parts=parts)
+    return U.ensemble_detector(
+        {name: _detector(spark, sf_dir, name) for name in _ENSEMBLE_PARTS})
 
 
 _SMOTE_N, _SMOTE_ANOM = 200, 20
@@ -521,10 +527,9 @@ ORACLES_TAIL = {**globals().get("ORACLES_TAIL", {}),
 
 # -- oracle-backed PCA: fixed-iteration power method --------------------------
 #
-# The Spark-ML SVD variant (ml.unsupervised.pca_2d_projection, M8)
-# stays as the operator; the REGISTERED query computes the same top-2
-# projection by a deterministic fixed-iteration power method whose
-# every float op a SQL engine replays bit-for-bit:
+# The registered query computes the top-2 PCA projection (M8) by a
+# deterministic fixed-iteration power method whose every float op a SQL
+# engine replays bit-for-bit:
 #   - the 6 features are exact BIGINT counts, so n/Σx/Σxy (and hence
 #     each correlation numerator/denominator) are exact integers in
 #     BOTH engines — no cross-row float summation anywhere;

@@ -396,53 +396,6 @@ def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("t.cosine") >= 0.4).cast("int").alias("is_near_dup"))
 
 
-def embedding_near_dups_broadcast_kernel(spark: SparkSession,
-                                         sf_dir: str) -> DataFrame:
-    """Test-side verifier for :func:`embedding_near_dups`: the original
-    broadcast-corpus GEMM kernel (collects the corpus matrix to the
-    driver — capped, NOT registered; the distributed blocked version
-    above is the product path)."""
-    import numpy as np
-    import pandas as pd
-
-    emb = (load_table(spark, sf_dir, "embeddings")
-           .select("vec_id", F.col("embedding").cast("array<double>")
-                   .alias("v")))
-    n_corpus = emb.count()
-    if n_corpus > 200_000:
-        raise ValueError(
-            f"broadcast kernel capped at 200k vectors (got {n_corpus})")
-    corpus = emb.orderBy("vec_id").toPandas()
-    ids = corpus["vec_id"].to_numpy()
-    C = np.stack(corpus["v"].to_numpy()).astype(np.float64)
-    nc = np.sqrt((C * C).sum(axis=1))
-    bc = spark.sparkContext.broadcast((ids, C, nc))
-
-    def score(batches):
-        ids_c, C_c, nc_c = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Q = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            nq = np.sqrt((Q * Q).sum(axis=1))
-            S = (Q @ C_c.T) / np.outer(nq, nc_c)
-            S = np.sign(S) * np.floor(np.abs(S) * 1e6 + 0.5) / 1e6
-            qids = pdf["vec_id"].to_numpy()
-            S[qids[:, None] == ids_c[None, :]] = -np.inf  # mask self
-            best = S.argmax(axis=1)
-            cos = S[np.arange(len(Q)), best]
-            yield pd.DataFrame({
-                "vec_id": qids,
-                "nn_id": ids_c[best],
-                "cosine": cos,
-                "is_near_dup": (cos >= 0.4).astype("int32"),
-            })
-
-    return emb.mapInPandas(
-        score, schema="vec_id long, nn_id long, cosine double, "
-                      "is_near_dup int")
-
-
 _EMB_NEAR_DUP_SQL = """
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 scored AS (
