@@ -50,7 +50,9 @@ def kmeans_fixed(emb: DataFrame, k: int = 8, n_iters: int = 2,
     query, but multi-consumer compositions (PQ's LUT + codes sides,
     the silhouette's b-join, the recall harness) re-ran every Lloyd
     step per reference and their physical plans grew to 96-156
-    Exchange nodes (plans/r12/pq_*_before.txt). Pinning k·dim doubles
+    Exchange nodes (`python scripts/dump_plans.py TAG SUFFIX
+    pq_adc_topk pq_quantization_report` writes the plans to
+    plans/TAG/). Pinning k·dim doubles
     costs one bounded job and matches how distributed Lloyd ships
     centroids between iterations at real scale (guide §2.4/§5:
     truncate multi-consumer lineage at tiny state)."""

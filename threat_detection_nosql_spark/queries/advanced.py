@@ -1350,7 +1350,8 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str):
     aggregate ever mixes m values). The round-11 per-book form
     replayed each book's full Lloyd lineage into every consumer and
     pq_adc_topk's physical plan carried 156 Exchange nodes
-    (plans/r12/pq_adc_topk_before.txt); fused + final-centroid pin it
+    (`python scripts/dump_plans.py TAG SUFFIX pq_adc_topk` writes the
+    plan to plans/TAG/); fused + final-centroid pin it
     scans the corpus once per iteration for all M books (guide §2.4).
     Returns (assigned, cent, qs): (m, vec_id, v, cell, dist) and the
     pinned (m, cell, cv) codebook table."""

@@ -23,6 +23,8 @@ from threat_detection_nosql_spark.ml.features import (
     user_feature_matrix,
 )
 from threat_detection_nosql_spark.ml.supervised import supervised_report
+from threat_detection_nosql_spark.operators.etl import activity_log
+from threat_detection_nosql_spark.queries.threat import user_counts
 
 # Each takes the scaled vector frame, except those in _MOMENT_DETECTORS,
 # which take the plain feature matrix (see _detector).
@@ -290,29 +292,13 @@ _KF_ITERS = 2
 def _kf_vectors(spark: SparkSession, sf_dir: str,
                 materialize: bool = True):
     """Shared min-max-scaled per-user feature vectors for the fixed
-    k-means family (anomalies + silhouette): A10 feature build → exact
-    A17 scaling → array vector per user. Factored so both queries and
-    both oracles replay ONE definition."""
+    k-means family (anomalies + silhouette): A10 feature build (the
+    ``user_counts`` base of ``user_features``) → exact A17 scaling →
+    array vector per user. Factored so both queries and both oracles
+    replay ONE definition."""
     from pyspark.sql import functions as F
 
-    from threat_detection_nosql_spark.operators.etl import activity_log
-
-    log = activity_log(spark, sf_dir)
-    divisor = F.when(F.col("total_activities") > 0,
-                     F.col("total_activities")).otherwise(F.lit(1))
-    base = (log.groupBy("user").agg(
-        F.count("*").alias("total_activities"),
-        F.sum(F.when(F.col("is_after_hours") == 1, 1).otherwise(0))
-         .alias("after_hours_activities"),
-        F.sum(F.when(F.col("is_weekend") == 1, 1).otherwise(0))
-         .alias("weekend_activities"),
-        F.countDistinct("pc").alias("unique_systems"),
-        F.countDistinct("resource").alias("unique_resources"),
-        F.countDistinct("activity").alias("activity_types"))
-        .withColumn("after_hours_ratio",
-                    F.round(F.col("after_hours_activities") / divisor, 6))
-        .withColumn("weekend_ratio",
-                    F.round(F.col("weekend_activities") / divisor, 6)))
+    base = user_counts(activity_log(spark, sf_dir))
     if materialize:
         # base is consumed TWICE (the min-max agg and the vector
         # build) — without this pin the events scan + Expand agg (the
@@ -601,22 +587,6 @@ def _power_components(R: list[list[float]]) -> tuple[list[float],
     return v1, iterate(R2)
 
 
-def _user_count_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from threat_detection_nosql_spark.operators.etl import activity_log
-    log = activity_log(spark, sf_dir)
-    return (log.groupBy("user").agg(
-        F.count("*").alias("total_activities"),
-        F.sum(F.when(F.col("is_after_hours") == 1, 1).otherwise(0))
-         .alias("after_hours_activities"),
-        F.sum(F.when(F.col("is_weekend") == 1, 1).otherwise(0))
-         .alias("weekend_activities"),
-        F.countDistinct("pc").alias("unique_systems"),
-        F.countDistinct("resource").alias("unique_resources"),
-        F.countDistinct("activity").alias("activity_types")))
-
-
 def user_pca_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user (PC1, PC2) scatter coordinates — the data behind the
     reference's committed resultats_non_supervise.csv PC1/PC2 columns
@@ -630,7 +600,8 @@ def user_pca_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    feats = _user_count_features(spark, sf_dir).localCheckpoint()
+    feats = (user_counts(activity_log(spark, sf_dir))
+             .select("user", *_PCA_FEATS).localCheckpoint())
     d = len(_PCA_FEATS)
     aggs = [F.count("*").alias("n")]
     aggs += [F.sum(c).alias(f"s{j}") for j, c in enumerate(_PCA_FEATS)]

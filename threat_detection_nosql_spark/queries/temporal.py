@@ -93,23 +93,31 @@ GROUP BY date_trunc('hour', ts)
 _SESSION_GAP_US = 30 * 60 * 1_000_000  # 30-minute inactivity gap
 
 
-def event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch sessionization (gaps-and-islands): a session breaks after
-    30 min of user inactivity. Both windows partition by user, so the
-    sort is per-user and the stage scales horizontally; the session
-    summary is a map-combinable re-aggregation of the same shuffle."""
+def sessionize(log: DataFrame) -> DataFrame:
+    """The sessionizer every session query reads (gaps-and-islands): a
+    session breaks after more than 30 min of user inactivity. Returns
+    (user, ts, event_id, activity, is_new, session_id): the gap is an
+    exact integer-µs lag over the user's (ts, event_id) total order and
+    ``session_id`` the running sum of ``is_new`` over the same order,
+    so both windows share one per-user sort."""
     from pyspark.sql.window import Window
-    log = activity_log(spark, sf_dir)
     w = Window.partitionBy("user").orderBy("ts", "event_id")
     gap = F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-    marked = log.select(
-        "user", "ts", "event_id",
+    return (log.select(
+        "user", "ts", "event_id", "activity",
         F.when(gap.isNull() | (gap > _SESSION_GAP_US), 1).otherwise(0)
-         .alias("is_new"))
-    sess = marked.withColumn(
-        "session_id",
-        F.sum("is_new").over(w.rowsBetween(Window.unboundedPreceding, 0)))
-    return (sess.groupBy("user", "session_id")
+        .alias("is_new"))
+        .withColumn("session_id", F.sum("is_new").over(
+            w.rowsBetween(Window.unboundedPreceding, 0))))
+
+
+def event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch sessionization: one row per ``sessionize`` session. Both
+    windows partition by user, so the sort is per-user and the stage
+    scales horizontally; the session summary is a map-combinable
+    re-aggregation of the same shuffle."""
+    return (sessionize(activity_log(spark, sf_dir))
+            .groupBy("user", "session_id")
             .agg(F.min("ts").alias("session_start"),
                  F.max("ts").alias("session_end"),
                  F.count("*").alias("n_events"),
@@ -317,18 +325,9 @@ def session_funnel_conversion(spark: SparkSession,
     funnel above). Sessionization and the stacked stage windows share
     one user-keyed sort: the session id is a running sum over the same
     (user, ts) ordering the funnel windows use."""
-    from pyspark.sql.window import Window
-    log = activity_log(spark, sf_dir)
-    w = Window.partitionBy("user").orderBy("ts", "event_id")
-    gap = F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-    sess = (log.select(
-        "user", "ts", "event_id", "activity",
-        F.when(gap.isNull() | (gap > _SESSION_GAP_US), 1).otherwise(0)
-        .alias("is_new"))
-        .withColumn("session_id", F.sum("is_new").over(
-            w.rowsBetween(Window.unboundedPreceding, 0))))
     per_session = funnel_stage_times(
-        sess, ["view", "click", "purchase"], key=["user", "session_id"])
+        sessionize(activity_log(spark, sf_dir)),
+        ["view", "click", "purchase"], key=["user", "session_id"])
     return per_session.agg(
         F.count("*").alias("sessions"),
         F.count(F.col("t1")).alias("viewed"),
@@ -727,32 +726,41 @@ def user_activity_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     division; users active on one day only are emitted with NULL slope
     (undefined fit) rather than dropped. One (user, day) agg + one
     per-user re-agg, both map-combinable; no window, no sort."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = (ev.groupBy(F.col("user_id").alias("user"),
-                        F.to_date("ts").alias("day"))
-             .agg(F.count("*").alias("y")))
+    ols = daily_count_ols(activity_log(spark, sf_dir))
+    slope = F.round("b", 6)
+    return ols.select(
+        "user", "n", slope.alias("slope"),
+        F.round((F.col("sy") - F.col("b") * F.col("sx")) / F.col("n"), 6)
+        .alias("intercept"),
+        F.when(slope > 0.05, F.lit("up"))
+        .when(slope < -0.05, F.lit("down"))
+        .when(slope.isNotNull(), F.lit("flat")).alias("trend"))
+
+
+def daily_count_ols(log: DataFrame) -> DataFrame:
+    """Per user: the OLS fit of daily event count y over the day offset
+    x from the user's first active day, as (user, n, sx, sy, b) with
+    ``b`` the unrounded slope, NULL when the fit is undefined (one
+    active day). n, Σx, Σy, Σxy and Σx² are exact BIGINT sums, so the
+    one division is the only float step."""
     from pyspark.sql.window import Window as W
+    daily = (log.groupBy("user", F.to_date("ts").alias("day"))
+             .agg(F.count("*").alias("y")))
     x = F.datediff(F.col("day"),
                    F.min("day").over(W.partitionBy("user"))).cast("long")
-    xy = daily.select("user", x.alias("x"), "y")
-    sums = (xy.groupBy("user")
+    sums = (daily.select("user", x.alias("x"), "y")
+            .groupBy("user")
             .agg(F.count("*").alias("n"),
                  F.sum("x").alias("sx"),
                  F.sum("y").alias("sy"),
                  F.sum(F.col("x") * F.col("y")).alias("sxy"),
                  F.sum(F.col("x") * F.col("x")).alias("sxx")))
     denom = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    slope = ((F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
-             * 1.0 / denom)
-    intercept = (F.col("sy") - slope * F.col("sx")) / F.col("n")
     return sums.select(
-        "user", "n",
-        F.when(denom > 0, F.round(slope, 6)).alias("slope"),
-        F.when(denom > 0, F.round(intercept, 6)).alias("intercept"),
+        "user", "n", "sx", "sy",
         F.when(denom > 0,
-               F.when(F.round(slope, 6) > 0.05, F.lit("up"))
-               .when(F.round(slope, 6) < -0.05, F.lit("down"))
-               .otherwise(F.lit("flat"))).alias("trend"))
+               (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
+               * 1.0 / denom).alias("b"))
 
 
 _TREND_SQL = """
@@ -807,12 +815,24 @@ def activity_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     probabilities are integer-count ratios rounded at the end, so the
     only float is the final division. Scales as one shuffle by user
     plus two map-combinable aggs."""
+    return transition_model(transition_pairs(activity_log(spark, sf_dir)))
+
+
+def transition_pairs(log: DataFrame) -> DataFrame:
+    """(user, prev_activity, activity) for every event after a user's
+    first, paired by a lag over the (ts, event_id) total order."""
     from pyspark.sql.window import Window as W
-    log = activity_log(spark, sf_dir)
     w = W.partitionBy("user").orderBy("ts", "event_id")
-    pairs = (log.select(F.lag("activity").over(w).alias("prev_activity"),
-                        F.col("activity"))
-             .filter(F.col("prev_activity").isNotNull()))
+    return (log.select("user",
+                       F.lag("activity").over(w).alias("prev_activity"),
+                       F.col("activity"))
+            .filter(F.col("prev_activity").isNotNull()))
+
+
+def transition_model(pairs: DataFrame) -> DataFrame:
+    """The global first-order model of ``transition_pairs``:
+    (prev_activity, activity, n, p), p the rounded share of n among
+    the transitions leaving prev_activity."""
     counts = (pairs.groupBy("prev_activity", "activity")
               .agg(F.count("*").alias("n")))
     totals = (counts.groupBy("prev_activity")
@@ -847,6 +867,11 @@ ORACLES_TAIL["activity_transition_matrix"] = _TRANSITION_SQL
 
 # -- sequence surprise: who behaves improbably? -------------------------------
 
+# Fewer gaps or transitions than this, and a user's dispersion or
+# surprise is NULL: the statistic would not be meaningful.
+_MIN_SAMPLES = 50
+
+
 def sequence_surprise_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 users by behavioral sequence surprise: the mean negative
     log transition probability of their activity sequence under the
@@ -858,25 +883,28 @@ def sequence_surprise_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln() the identical rounded number — no cross-engine drift enters
     the logs); the per-user mean is a rounded float agg with ≥ 50
     transitions required so the score is statistically meaningful; the
-    cut orders by the rounded score. Shape: the matrix build (25-row
-    result — broadcast), the same lag window re-paired per user, one
-    join on the (prev, next) pair, one per-user avg."""
-    from pyspark.sql.window import Window as W
-    log = activity_log(spark, sf_dir)
-    model = (activity_transition_matrix(spark, sf_dir)
-             .select("prev_activity", "activity", "p"))
-    w = W.partitionBy("user").orderBy("ts", "event_id")
-    pairs = (log.select("user",
-                        F.lag("activity").over(w).alias("prev_activity"),
-                        F.col("activity"))
-             .filter(F.col("prev_activity").isNotNull()))
-    scored = pairs.join(F.broadcast(model), ["prev_activity", "activity"])
-    return (scored.groupBy("user")
-            .agg(F.count("*").alias("n_transitions"),
-                 F.round(F.avg(-F.log("p")), 6).alias("surprise"))
-            .filter(F.col("n_transitions") >= 50)
+    cut orders by the rounded score. Shape: one lag window pairs each
+    user's events, the matrix (25-row result — broadcast) aggregates
+    those same pairs, one join on the (prev, next) pair, one per-user
+    avg."""
+    return (sequence_surprise(activity_log(spark, sf_dir))
+            .filter(F.col("n_transitions") >= _MIN_SAMPLES)
             .orderBy(F.desc("surprise"), F.asc("user"))
             .limit(10))
+
+
+def sequence_surprise(log: DataFrame) -> DataFrame:
+    """Per user: ``n_transitions`` and ``surprise``, the rounded mean
+    −ln p of their transitions under the global ``transition_model``
+    built from the same pairs; NULL below ``_MIN_SAMPLES``."""
+    pairs = transition_pairs(log)
+    model = transition_model(pairs).select("prev_activity", "activity", "p")
+    n = F.count("*")
+    return (pairs.join(F.broadcast(model), ["prev_activity", "activity"])
+            .groupBy("user")
+            .agg(n.alias("n_transitions"),
+                 F.when(n >= _MIN_SAMPLES,
+                        F.round(F.avg(-F.log("p")), 6)).alias("surprise")))
 
 
 _SURPRISE_SQL = f"""
@@ -984,8 +1012,18 @@ def arrival_burstiness_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines up to that point. One lag window over the (ts, event_id)
     total order, one per-user agg; ≥ 50 gaps required so the statistic
     is meaningful; cut on the rounded value."""
+    return (gap_dispersion(activity_log(spark, sf_dir))
+            .filter(F.col("dispersion").isNotNull())
+            .orderBy(F.desc("dispersion"), F.asc("user"))
+            .limit(10))
+
+
+def gap_dispersion(log: DataFrame) -> DataFrame:
+    """Per user: ``n`` inter-event gaps (whole seconds, lag over the
+    (ts, event_id) total order) and their rounded ``dispersion``
+    (n·Σg² − (Σg)²) / (n·Σg); NULL below ``_MIN_SAMPLES`` gaps or when
+    no gap is positive."""
     from pyspark.sql.window import Window as W
-    log = activity_log(spark, sf_dir)
     w = W.partitionBy("user").orderBy("ts", "event_id")
     gaps = (log.select(
                 "user",
@@ -999,10 +1037,10 @@ def arrival_burstiness_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum(F.col("g") * F.col("g")).alias("sg2")))
     disp = ((F.col("n") * F.col("sg2") - F.col("sg") * F.col("sg"))
             * 1.0 / (F.col("n") * F.col("sg")))
-    return (sums.filter((F.col("n") >= 50) & (F.col("sg") > 0))
-            .select("user", "n", F.round(disp, 6).alias("dispersion"))
-            .orderBy(F.desc("dispersion"), F.asc("user"))
-            .limit(10))
+    return sums.select(
+        "user", "n",
+        F.when((F.col("n") >= _MIN_SAMPLES) & (F.col("sg") > 0),
+               F.round(disp, 6)).alias("dispersion"))
 
 
 _BURSTINESS_SQL = f"""
@@ -1271,18 +1309,8 @@ def session_activity_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-purchase expansion shape), and every probability is an
     integer-count ratio over the session total — one division chain,
     rounded once."""
-    from pyspark.sql.window import Window as W
-    log = activity_log(spark, sf_dir)
-    w = W.partitionBy("user").orderBy("ts", "event_id")
-    gap = F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-    marked = log.select(
-        "user", "ts", "event_id", "activity",
-        F.when(gap.isNull() | (gap > _SESSION_GAP_US), 1).otherwise(0)
-        .alias("is_new"))
-    sess = marked.withColumn(
-        "session_id",
-        F.sum("is_new").over(w.rowsBetween(W.unboundedPreceding, 0)))
-    baskets = (sess.groupBy("user", "session_id")
+    baskets = (sessionize(activity_log(spark, sf_dir))
+               .groupBy("user", "session_id")
                .agg(F.sort_array(F.collect_set("activity")).alias("acts")))
     n_sessions = baskets.count()
     singles = (baskets.select(F.explode("acts").alias("activity"))
@@ -2047,20 +2075,10 @@ def session_path_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries at most 3 rows per session — then a count agg over the
     tiny path domain and a TakeOrdered 10."""
     from pyspark.sql.window import Window
-    log = activity_log(spark, sf_dir)
-    w = Window.partitionBy("user").orderBy("ts", "event_id")
-    gap = F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-    marked = log.select(
-        "user", "ts", "event_id", "activity",
-        F.when(gap.isNull() | (gap > _SESSION_GAP_US), 1).otherwise(0)
-         .alias("is_new"))
-    sess = marked.withColumn(
-        "session_id",
-        F.sum("is_new").over(w.rowsBetween(Window.unboundedPreceding,
-                                           0)))
     sw = Window.partitionBy("user", "session_id").orderBy("ts",
                                                           "event_id")
-    steps = (sess.withColumn("rn", F.row_number().over(sw))
+    steps = (sessionize(activity_log(spark, sf_dir))
+             .withColumn("rn", F.row_number().over(sw))
              .filter(F.col("rn") <= 3))
     paths = (steps.groupBy("user", "session_id")
              .agg(F.concat_ws(
@@ -2497,15 +2515,7 @@ def session_entry_exit_report(spark: SparkSession,
     once on the user key); the final agg is a ≤|activities|-row
     map-combinable count."""
     from pyspark.sql.window import Window
-    log = activity_log(spark, sf_dir)
-    w = Window.partitionBy("user").orderBy("ts", "event_id")
-    gap = F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-    sess = (log.select("user", "ts", "event_id", "activity",
-                       F.when(gap.isNull() | (gap > _SESSION_GAP_US), 1)
-                        .otherwise(0).alias("is_new"))
-            .withColumn("session_id",
-                        F.sum("is_new").over(
-                            w.rowsBetween(Window.unboundedPreceding, 0))))
+    sess = sessionize(activity_log(spark, sf_dir))
     ws = Window.partitionBy("user", "session_id").orderBy("ts", "event_id")
     wsd = Window.partitionBy("user", "session_id").orderBy(
         F.desc("ts"), F.desc("event_id"))

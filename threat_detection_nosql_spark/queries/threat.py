@@ -30,6 +30,11 @@ from threat_detection_nosql_spark.operators.etl import (
     activity_log,
 )
 from threat_detection_nosql_spark.operators.graph import user_degree
+from threat_detection_nosql_spark.queries.temporal import (
+    daily_count_ols,
+    gap_dispersion,
+    sequence_surprise,
+)
 
 # Shared oracle CTE: the activity-log view in DuckDB terms.
 _LOG_CTE = f"WITH log AS ({ACTIVITY_LOG_ORACLE_SQL})"
@@ -235,19 +240,16 @@ GROUP BY p.user, i.resource
 
 # -- Q11: the full per-user feature matrix (`:124-247`, A10 + J5/J6) ---------
 
-def user_features(spark: SparkSession, sf_dir: str,
-                  approx: bool = False) -> DataFrame:
-    """The reference issues 6 correlated CALL{} subqueries per user plus
-    two client-side entropy loops (`neo4j_analysis.py:134-175,203-243`).
-    Decorrelated here into ONE multi-aggregate pass (A10) — six features
-    in a single shuffle — plus two entropy aggs joined on user (J6);
-    the entropy outputs are tiny (|users| rows) so they broadcast.
+def user_counts(log: DataFrame, approx: bool = False) -> DataFrame:
+    """Per-user counts and ratios over the activity log: the six
+    features of ONE multi-aggregate pass (A10) plus the two after-hours
+    and weekend ratios. ``user_features`` joins the entropies onto it;
+    the fixed-ML feature vectors and the PCA projection read it as is.
 
     ``approx=True`` is the 100 TB mode: the three exact countDistincts
     force an Expand (3× shuffle rows); approx_count_distinct (HLL,
     rsd 1%) keeps the aggregation single-pass with fixed-size state.
     """
-    log = activity_log(spark, sf_dir)
     if approx:
         distinct_aggs = [
             F.approx_count_distinct("pc", 0.01).alias("unique_systems"),
@@ -272,16 +274,30 @@ def user_features(spark: SparkSession, sf_dir: str,
     # safe-divide ratio guard (F9, `neo4j_analysis.py:184-185`)
     divisor = F.when(F.col("total_activities") > 0,
                      F.col("total_activities")).otherwise(F.lit(1))
-    base = (base
+    return (base
             .withColumn("after_hours_ratio",
                         F.round(F.col("after_hours_activities") / divisor, 6))
             .withColumn("weekend_ratio",
                         F.round(F.col("weekend_activities") / divisor, 6)))
+
+
+def user_features(spark: SparkSession, sf_dir: str,
+                  approx: bool = False) -> DataFrame:
+    """The reference issues 6 correlated CALL{} subqueries per user plus
+    two client-side entropy loops (`neo4j_analysis.py:134-175,203-243`).
+    Decorrelated here into ONE multi-aggregate pass (A10) — six features
+    in a single shuffle — plus two entropy aggs joined on user (J6);
+    the entropy outputs are tiny (|users| rows) so they broadcast.
+    ``approx`` picks ``user_counts``' distinct-count mode.
+    """
+    log = activity_log(spark, sf_dir)
+    base = user_counts(log, approx)
     # fused entropy path, round 12: BOTH entropies from ONE chain. The
     # r11 form re-aggregated the (user, activity, hour) pre-agg twice
     # and relied on ReuseExchange to dedupe the shared exchange — the
-    # physical plan shows it did NOT fire (three full scan→agg chains,
-    # plans/r12/user_features_before.txt). An Expand tags each pre-agg
+    # physical plan showed it did NOT fire: three full scan→agg chains
+    # (`python scripts/dump_plans.py TAG SUFFIX user_features` writes
+    # the current plan to plans/TAG/). An Expand tags each pre-agg
     # row once per dimension, so one aggregation chain computes both
     # frequency tables, both entropies (the exact entropy_from_freq
     # algebra: round(log2(T) − Σf·log2 f / T, 6) over identical
@@ -491,8 +507,16 @@ def rare_resource_access_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast — |resources| rows); one per-user sum of a log over
     integer ratios, rounded, cut on the rounded score. n_users rides
     driver-side as one scalar."""
-    log = activity_log(spark, sf_dir).filter(F.col("resource").isNotNull())
-    ur = log.select("user", "resource").distinct()
+    return (resource_rarity(activity_log(spark, sf_dir))
+            .orderBy(F.desc("rarity_score"), F.asc("user"))
+            .limit(10))
+
+
+def resource_rarity(log: DataFrame) -> DataFrame:
+    """Per user: ``n_resources`` distinct resources touched and their
+    ``rarity_score``, Σ ln(n_users / users touching each), rounded."""
+    ur = (log.filter(F.col("resource").isNotNull())
+          .select("user", "resource").distinct())
     n_users = float(ur.select("user").distinct().count())
     audience = ur.groupBy("resource").agg(
         F.countDistinct("user").alias("n_touching"))
@@ -500,9 +524,7 @@ def rare_resource_access_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (ur.join(F.broadcast(audience), "resource")
             .groupBy("user")
             .agg(F.count("*").alias("n_resources"),
-                 F.round(F.sum(idf), 6).alias("rarity_score"))
-            .orderBy(F.desc("rarity_score"), F.asc("user"))
-            .limit(10))
+                 F.round(F.sum(idf), 6).alias("rarity_score")))
 
 
 _RARE_ACCESS_SQL = f"""
@@ -708,91 +730,29 @@ def user_triage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     where a user lacks the volume for a statistic rather than silently
     zeroed. The report every individual query in this family feeds.
 
-    All five signals are per-user aggregates over the SAME user key,
-    so the composition is one events shuffle re-used by five
-    map-combinable aggregations plus user-keyed joins of tiny frames —
-    no new shuffle dimension; every component reuses the exact
-    cross-engine arithmetic its standalone query already proved
-    (rounded ratios, integer-moment dispersion, ln of rounded model
-    probabilities, exact-BIGINT OLS)."""
-    from pyspark.sql.window import Window as W
+    Every signal but the first is the per-user builder its standalone
+    query ranks (``resource_rarity``, ``gap_dispersion``,
+    ``sequence_surprise``, ``daily_count_ols``), so each column equals
+    that query's value by construction; the NULL rules (≥ 50 gaps or
+    transitions, a defined fit) live in the builders. All five are
+    per-user aggregates over the SAME user key, composed by user-keyed
+    left joins of |users|-row frames — no new shuffle dimension."""
     log = activity_log(spark, sf_dir)
-
     base = (log.groupBy("user")
             .agg(F.count("*").alias("n_events"),
                  F.round(F.sum("is_after_hours") * 1.0 / F.count("*"), 6)
                  .alias("after_hours_ratio")))
-
-    ur = (log.filter(F.col("resource").isNotNull())
-          .select("user", "resource").distinct())
-    n_users = float(ur.select("user").distinct().count())
-    audience = ur.groupBy("resource").agg(
-        F.countDistinct("user").alias("n_touching"))
-    rarity = (ur.join(F.broadcast(audience), "resource")
-              .groupBy("user")
-              .agg(F.round(F.sum(F.log(F.lit(n_users)
-                                       / F.col("n_touching"))), 6)
-                   .alias("rarity_score")))
-
-    w = W.partitionBy("user").orderBy("ts", "event_id")
-    gaps = (log.select(
-                "user",
-                ((F.unix_micros("ts")
-                  - F.unix_micros(F.lag("ts").over(w)))
-                 / F.lit(1_000_000)).cast("long").alias("g"))
-            .filter(F.col("g").isNotNull()))
-    disp = (gaps.groupBy("user")
-            .agg(F.count("*").alias("ng"), F.sum("g").alias("sg"),
-                 F.sum(F.col("g") * F.col("g")).alias("sg2"))
-            .select("user",
-                    F.when((F.col("ng") >= 50) & (F.col("sg") > 0),
-                           F.round((F.col("ng") * F.col("sg2")
-                                    - F.col("sg") * F.col("sg")) * 1.0
-                                   / (F.col("ng") * F.col("sg")), 6))
-                    .alias("dispersion")))
-
-    pairs = (log.select("user",
-                        F.lag("activity").over(w).alias("prev_activity"),
-                        F.col("activity"))
-             .filter(F.col("prev_activity").isNotNull()))
-    counts = (pairs.groupBy("prev_activity", "activity")
-              .agg(F.count("*").alias("n")))
-    totals = counts.groupBy("prev_activity").agg(F.sum("n").alias("nf"))
-    model = (counts.join(totals, "prev_activity")
-             .select("prev_activity", "activity",
-                     F.round(F.col("n") * 1.0 / F.col("nf"), 6)
-                     .alias("p")))
-    surprise = (pairs.join(F.broadcast(model),
-                           ["prev_activity", "activity"])
-                .groupBy("user")
-                .agg(F.count("*").alias("nt"),
-                     F.round(F.avg(-F.log("p")), 6).alias("sup"))
-                .select("user", F.when(F.col("nt") >= 50, F.col("sup"))
-                        .alias("sequence_surprise")))
-
-    daily = (log.groupBy("user", F.to_date("ts").alias("day"))
-             .agg(F.count("*").alias("y")))
-    x = F.datediff(F.col("day"),
-                   F.min("day").over(W.partitionBy("user"))).cast("long")
-    sums = (daily.select("user", x.alias("x"), "y")
-            .groupBy("user")
-            .agg(F.count("*").alias("n"), F.sum("x").alias("sx"),
-                 F.sum("y").alias("sy"),
-                 F.sum(F.col("x") * F.col("y")).alias("sxy"),
-                 F.sum(F.col("x") * F.col("x")).alias("sxx")))
-    denom = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    trend = sums.select(
-        "user",
-        F.when(denom > 0,
-               F.round((F.col("n") * F.col("sxy")
-                        - F.col("sx") * F.col("sy")) * 1.0 / denom, 6))
-        .alias("trend_slope"))
-
-    return (base.join(rarity, "user", "left")
-            .join(disp, "user", "left")
-            .join(surprise, "user", "left")
-            .join(trend, "user", "left")
-            .orderBy("user"))
+    signals = [
+        resource_rarity(log).select("user", "rarity_score"),
+        gap_dispersion(log).select("user", "dispersion"),
+        sequence_surprise(log).select(
+            "user", F.col("surprise").alias("sequence_surprise")),
+        daily_count_ols(log).select(
+            "user", F.round("b", 6).alias("trend_slope")),
+    ]
+    for signal in signals:
+        base = base.join(signal, "user", "left")
+    return base.orderBy("user")
 
 
 _TRIAGE_SQL = f"""
