@@ -18,7 +18,7 @@ import textwrap
 import pytest
 from pyspark.find_spark_home import _find_spark_home
 
-from threat_detection_nosql_spark import cds
+from threat_detection_nosql_spark import cds, localfs
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -26,12 +26,15 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # its JVM before it exits itself
 _CHILD = textwrap.dedent("""
     from pyspark import SparkContext
-    from threat_detection_nosql_spark import cds
+    from threat_detection_nosql_spark import cds, localfs
     from threat_detection_nosql_spark.session import get_spark
 
     spark = get_spark("cds")
     print("mode", cds.mode(spark),
           spark.range(10).selectExpr("sum(id)").first()[0], flush=True)
+    print("raw", spark._jvm.org.apache.hadoop.fs.FileSystem.getLocal(
+        spark._jsc.hadoopConfiguration()).getRawFileSystem().getClass()
+        .getName(), flush=True)
     spark.stop()
     gateway = SparkContext._gateway
     gateway.shutdown()
@@ -72,15 +75,22 @@ def test_second_launch_maps_the_archive_the_first_wrote(tmp_path,
         return out.stdout
 
     root = cache / "threat_detection_nosql_spark" / "cds"
-    assert "mode wrote 45" in launch()
+    out = launch()
+    assert "mode wrote 45" in out
+    # a dump never records the local filesystem's jar, so launches
+    # without it (no javac, an older checkout) still map the archive
+    assert "raw org.apache.hadoop.fs.RawLocalFileSystem" in out
     # the dump replaced the empty file its launch claimed the name with
     dumps = list(root.glob("*.jsa"))
     assert len(dumps) == 1 and dumps[0].name.count(".") == 2
-    # -Xshare:on makes the JVM refuse to start unless the archive maps
-    out = launch("--driver-java-options '-Xshare:on -Xlog:cds' "
-                 "pyspark-shell")
+    # -Xshare:on makes the JVM refuse to start unless the archive maps,
+    # here with the local filesystem's jar appended to the class path
+    out = launch("--conf 'spark.driver.extraJavaOptions=-Xshare:on "
+                 "-Xlog:cds' pyspark-shell")
     assert "mode used 45" in out
     assert "Mapped dynamic region" in out
+    if localfs.build(_find_spark_home()) is not None:
+        assert f"raw {localfs.CLASS_NAME}$Raw" in out
     key = dumps[0].name.split(".")[0]
     assert sorted(p.name for p in root.glob("*.jsa")) == [f"{key}.jsa"]
 

@@ -4,7 +4,11 @@ Spark's default checkpoint manager renames every checkpoint file with
 `FileContext.rename`. On the local filesystem, without a native
 libhadoop, that rename forks `readlink` to resolve links. `get_spark`
 picks the `FileSystem` manager in local sessions, whose rename is one
-rename(2). These tests pin the choice, count the forks, and check that
+rename(2). Hadoop's local filesystem also forks `chmod` for each file
+and directory it creates; `get_spark` swaps in the package's
+`NioLocalFileSystem`, which sets the same mode with one chmod(2) and
+keeps the `.crc` files. These tests pin both choices, count the forks,
+compare a checkpoint with one Hadoop's own class writes, and check that
 restart and the one-writer guard still hold under the new manager.
 """
 
@@ -12,6 +16,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import stat
 import subprocess
 import sys
 import textwrap
@@ -19,13 +24,16 @@ import time
 
 import pytest
 from pyspark.errors import PySparkException
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import functions as F
 from py4j.protocol import Py4JJavaError
 
 from tests.conftest import SF_SMALL
+from threat_detection_nosql_spark import cds, localfs
 
 FS_MANAGER = ("org.apache.spark.sql.execution.streaming.checkpointing."
               "FileSystemBasedCheckpointFileManager")
+RAW_CLASS = localfs.CLASS_NAME + "$Raw"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -38,23 +46,37 @@ def test_local_session_picks_the_filesystem_manager(spark, tmp_path):
     assert manager.getClass().getName() == FS_MANAGER
 
 
-# runs in a child process, whose JVM inherits the shim-first PATH; only
-# spawns made while the query runs are counted
+# runs in a child process, whose JVM inherits the shim-first PATH; the
+# JVM forks one witness of each command, which shows the shim is on its
+# PATH; then only spawns made during a warm pass of the query count
 _CHILD = textwrap.dedent("""
     import os, sys
     from threat_detection_nosql_spark.queries.streaming_queries import (
         stream_deduped_counts)
     from threat_detection_nosql_spark.session import get_spark
 
-    def spawned(cmd):
+    def spawned():
         with open(os.environ["SPAWN_LOG"]) as fh:
-            return fh.read().split().count(cmd)
+            names = fh.read().split()
+        return {cmd: names.count(cmd) for cmd in ("readlink", "chmod")}
 
     spark = get_spark("spawn_count")
-    before = {cmd: spawned(cmd) for cmd in ("readlink", "chmod")}
+    # a cold pass: Spark forks `chmod a+x` on each fetch of the package
+    # zip that ships to the Python workers, once per session
     stream_deduped_counts(spark, sys.argv[1]).collect()
-    for cmd, n in before.items():
-        print(cmd, spawned(cmd) - n)
+    jvm = spark._jvm
+    print("raw", jvm.org.apache.hadoop.fs.FileSystem.getLocal(
+        spark._jsc.hadoopConfiguration()).getRawFileSystem()
+        .getClass().getName())
+    before = spawned()
+    for cmd in ("readlink", "chmod u+w"):
+        jvm.java.lang.Runtime.getRuntime().exec(
+            f"{cmd} {os.getcwd()}").waitFor()
+    witness = spawned()
+    stream_deduped_counts(spark, sys.argv[1]).collect()
+    after = spawned()
+    for cmd in before:
+        print(cmd, witness[cmd] - before[cmd], after[cmd] - witness[cmd])
     spark.stop()
 """)
 
@@ -72,7 +94,14 @@ def _shim(bin_dir, log) -> None:
     open(log, "w").close()
 
 
-def test_stateful_stream_forks_no_readlink(tmp_path):
+def test_stateful_stream_forks_no_readlink(tmp_path, monkeypatch):
+    # a cache of its own, where this (live) process claims the CDS dump:
+    # the child then launches without dumping an archive, since a
+    # dumping launch keeps Hadoop's own local filesystem
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    cds.plan(_find_spark_home())
+    if localfs.build(_find_spark_home()) is None:
+        pytest.skip("no javac: the session keeps Hadoop's local filesystem")
     bin_dir, log = str(tmp_path / "bin"), str(tmp_path / "spawn.log")
     _shim(bin_dir, log)
     env = {**os.environ,
@@ -87,14 +116,12 @@ def test_stateful_stream_forks_no_readlink(tmp_path):
                          env=env, cwd=str(tmp_path), capture_output=True,
                          text=True, timeout=300)
     assert out.returncode == 0, out.stderr[-2000:]
-    counts = {cmd: int(n) for cmd, n in
-              (line.split() for line in out.stdout.splitlines()
-               if line.startswith(("readlink ", "chmod ")))}
-    # each new checkpoint file still forks chmod, which shows the shim
-    # was on the JVM's PATH; with native IO nothing forks at all
-    if counts["chmod"] == 0:
-        pytest.skip("Hadoop forked no shell command (native IO)")
-    assert counts["readlink"] == 0
+    lines = dict(line.split(" ", 1) for line in out.stdout.splitlines()
+                 if line.startswith(("raw ", "readlink ", "chmod ")))
+    assert lines["raw"] == RAW_CLASS
+    # (witness forks, forks during the warm pass)
+    assert lines["readlink"].split() == ["1", "0"]
+    assert lines["chmod"].split() == ["1", "0"]
 
 
 def _write_part(spark, path, rows) -> None:
@@ -193,3 +220,75 @@ def test_second_start_on_an_active_checkpoint_is_refused(spark, tmp_path,
     finally:
         spark.conf.unset("spark.sql.streaming.stopActiveRunOnRestart")
         first.stop()
+
+
+def _session_fs(spark, tmp_path):
+    """The session's local filesystem for ``tmp_path``, as a stream's
+    checkpoint manager gets it; skips when the session launched with
+    Hadoop's own (a launch that dumped the CDS archive, or no javac)."""
+    if spark.sparkContext.getConf().get(localfs.IMPL_CONF, None) is None:
+        pytest.skip("this session launched with Hadoop's local filesystem")
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return jvm.org.apache.hadoop.fs.Path(str(tmp_path)).getFileSystem(conf)
+
+
+def _tree(root) -> dict[str, int]:
+    """Relative path -> permission bits of everything under ``root``."""
+    out = {}
+    for dirpath, dirs, files in os.walk(root):
+        for name in dirs + files:
+            path = os.path.join(dirpath, name)
+            out[os.path.relpath(path, root)] = stat.S_IMODE(
+                os.stat(path).st_mode)
+    return out
+
+
+def test_checkpoint_matches_hadoops_local_filesystem(spark, tmp_path,
+                                                     two_file_stream):
+    """A stateful stream's checkpoint written through the session's
+    filesystem has the same files, ``.crc`` files and mode bits as one
+    written through a stock ``LocalFileSystem`` in the same session."""
+    fs = _session_fs(spark, tmp_path)
+    assert fs.getClass().getName() == localfs.CLASS_NAME
+    assert fs.getRawFileSystem().getClass().getName() == RAW_CLASS
+    nio, stock = tmp_path / "ck_nio", tmp_path / "ck_stock"
+    _totals(spark, two_file_stream, str(nio), "ck_nio",
+            {"availableNow": True}).awaitTermination(120)
+    # the FileSystem cache is keyed by scheme, not class: bypass it so
+    # the stream's checkpoint manager builds Hadoop's class
+    spark.conf.set("fs.file.impl", "org.apache.hadoop.fs.LocalFileSystem")
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    try:
+        assert (_session_fs(spark, tmp_path).getRawFileSystem().getClass()
+                .getName() == "org.apache.hadoop.fs.RawLocalFileSystem")
+        _totals(spark, two_file_stream, str(stock), "ck_stock",
+                {"availableNow": True}).awaitTermination(120)
+    finally:
+        spark.conf.unset("fs.file.impl")
+        spark.conf.unset("fs.file.impl.disable.cache")
+    assert _rows(spark, "ck_nio") == _rows(spark, "ck_stock")
+    tree = _tree(nio)
+    assert tree == _tree(stock)
+    files = [p for p in tree
+             if os.path.isfile(nio / p) and not p.endswith(".crc")]
+    assert any(p.startswith("state") for p in files)
+    for p in files:
+        head, name = os.path.split(p)
+        assert os.path.join(head, f".{name}.crc") in tree
+
+
+def test_sticky_mode_defers_to_hadoop(spark, tmp_path):
+    """java.nio cannot set the sticky bit, so such a mode goes through
+    Hadoop's own setPermission; plain modes are applied as given."""
+    fs = _session_fs(spark, tmp_path)
+    jvm = spark._jvm
+    perm = jvm.org.apache.hadoop.fs.permission.FsPermission
+    sticky, plain = tmp_path / "sticky", tmp_path / "plain"
+    sticky.mkdir()
+    plain.write_text("")
+    fs.setPermission(jvm.org.apache.hadoop.fs.Path(str(sticky)),
+                     perm("1751"))
+    fs.setPermission(jvm.org.apache.hadoop.fs.Path(str(plain)), perm("640"))
+    assert stat.S_IMODE(sticky.stat().st_mode) == 0o1751
+    assert stat.S_IMODE(plain.stat().st_mode) == 0o640

@@ -167,6 +167,17 @@ def test_available_now_trigger_drains_and_stops(spark):
     assert spark.table("avnow").count() > 0
 
 
+def test_twin_leaves_no_sink_table(spark):
+    """A drained twin's frame holds its memory sink, so the sink's
+    ``s_*`` view is dropped and later queries still read the rows."""
+    from tests.conftest import SF_SMALL
+    out = SQ.stream_deduped_counts(spark, SF_SMALL)
+    assert not [t.name for t in spark.catalog.listTables()
+                if t.name.startswith("s_")]
+    rows = out.collect()
+    assert rows and out.collect() == rows
+
+
 def test_tws_profiles_match_batch_or_skip(spark):
     """transformWithStateInPandas profile: post-drain state must equal
     the batch aggregate. Skipped where google.protobuf (the state-server

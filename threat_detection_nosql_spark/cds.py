@@ -60,6 +60,11 @@ class Launch:
     java_options: str  # the value for JAVA_OPTIONS_CONF
     conf_dir: str      # the empty SPARK_CONF_DIR to launch with
 
+    @property
+    def dumps(self) -> bool:
+        """True when this JVM writes the archive as it exits."""
+        return "-XX:ArchiveClassesAtExit=" in self.java_options
+
 
 def cache_dir() -> str:
     base = os.environ.get("XDG_CACHE_HOME") or os.path.join(
@@ -224,15 +229,22 @@ def launching(spark_home: str) -> Iterator[Launch | None]:
     if launch is None:
         yield None
         return
-    saved = os.environ.get("SPARK_CONF_DIR")
-    os.environ["SPARK_CONF_DIR"] = launch.conf_dir
-    try:
+    with setenv("SPARK_CONF_DIR", launch.conf_dir):
         yield launch
+
+
+@contextlib.contextmanager
+def setenv(name: str, value: str) -> Iterator[None]:
+    """Set the environment variable ``name`` while the block runs."""
+    saved = os.environ.get(name)
+    os.environ[name] = value
+    try:
+        yield
     finally:
         if saved is None:
-            os.environ.pop("SPARK_CONF_DIR", None)
+            os.environ.pop(name, None)
         else:
-            os.environ["SPARK_CONF_DIR"] = saved
+            os.environ[name] = saved
 
 
 def mode(spark) -> str:

@@ -76,7 +76,12 @@ def run_stream_to_table(stream_df: DataFrame, *,
         })
     finally:
         q.stop()
-    return stream_df.sparkSession.table(name)
+    # the resolved frame holds the sink itself, so the view can go: a
+    # sink then lives as long as its frame, not as long as the session
+    spark = stream_df.sparkSession
+    table = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return table
 
 
 def windowed_user_counts(spark: SparkSession, sf_dir: str,
